@@ -117,9 +117,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, sf_dir, name)
 
 
-def _size_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf ("128MB", "4194304b", "134217728")."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
+def _parse_size(raw: str, default: int) -> int:
+    """Parse a byte size ("128MB", "20k", "4194304b", "134217728");
+    ``default`` when the value does not parse."""
+    raw = raw.strip().lower()
     mult = 1
     for suffix, m in (
         ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
@@ -133,6 +134,11 @@ def _size_conf(spark: SparkSession, key: str, default: int) -> int:
         return int(raw) * mult
     except ValueError:
         return default
+
+
+def _size_conf(spark: SparkSession, key: str, default: int) -> int:
+    """Parse a Spark byte-size conf."""
+    return _parse_size(str(spark.conf.get(key, str(default))), default)
 
 
 def _scan_file_sizes(df: DataFrame) -> list[int] | None:
@@ -274,10 +280,25 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     est = _estimated_scan_partitions(df, sizes=sizes)
     if est is None or est >= parallelism:
         return df
-    target = int(
-        os.environ.get(_FAN_OUT_TARGET_ENV, str(_FAN_OUT_TARGET_DEFAULT))
+    target = _parse_size(
+        os.environ.get(_FAN_OUT_TARGET_ENV, ""), _FAN_OUT_TARGET_DEFAULT
     )
     width = min(parallelism, max(est, -(-sum(sizes) // max(target, 1))))
     if width <= est:
         return df
     return df.repartition(width)
+
+
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and cut its lineage — the one pinning seam.
+
+    The mode follows the session: with a checkpoint dir set
+    (``sparkContext.setCheckpointDir``) the pin is a reliable
+    ``checkpoint``, so a lost executor re-reads the pinned partitions from
+    that storage instead of failing the query; otherwise it is a
+    ``localCheckpoint`` — executor-local blocks, the fast form for local
+    mode, lost with their executor. ``eager`` materializes at once (one job)
+    instead of on first use."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

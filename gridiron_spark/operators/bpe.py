@@ -14,14 +14,16 @@ best pair is a 1-row broadcast joined into the next segmentation, and the
 merge table is the union of those 1-row frames.
 
 At 100 TB the loop cost is independent of corpus size (|vocab| rows per
-round); lineage across rounds is cut with lazy localCheckpoints, the same
-treatment as operators/dedup.connected_components.
+round); lineage across rounds is cut with lazy pins (io.tables.pin), the
+same treatment as operators/dedup.connected_components.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gridiron_spark.io.tables import pin
 
 # Sentinel delimiting symbols inside the packed segmentation string. Must
 # be absent from the corpus alphabet (the documents tables are space +
@@ -52,30 +54,31 @@ def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _run_bpe(
-    wc: DataFrame, n_merges: int, pin: bool = True
+    wc: DataFrame, n_merges: int
 ) -> tuple[list[DataFrame], DataFrame]:
     """The shared merge loop: returns (per-step 1-row winner frames, the
     final per-word segmentation (word, freq, seg)).
 
-    ``pin`` materializes each round's ≤1-row winner and the seg0 corpus
-    aggregate with lazy localCheckpoints so no consumer pair recomputes
-    them (round 14, guide §5). It truncates the STATIC plan at the
-    checkpoints, so the plan-shape guard builds with pin=False to assert
-    the per-round operator structure on the untruncated dataflow — the
-    pins change only where lineage is cut, never which operators run."""
-    seg = wc.select(
-        "word",
-        "freq",
-        F.regexp_replace("word", "(.)", SENTINEL + "$1" + SENTINEL).alias(
-            "seg"
+    Each round's ≤1-row winner and the seg0 corpus aggregate are pinned
+    lazily so no consumer pair recomputes them (round 14, guide §5). The
+    pins truncate the STATIC plan, so the plan-shape guard swaps
+    :func:`pin` for the identity to assert the per-round operator
+    structure on the untruncated dataflow — the pins change only where
+    lineage is cut, never which operators run."""
+    # pinned: seg0 is the corpus-sized word_freq aggregate — round 1's
+    # pair count AND the round-1 re-segmentation both consume it, and
+    # without the pin each ran the corpus tokenize+agg separately
+    # (round 14, guide §5 recompute)
+    seg = pin(
+        wc.select(
+            "word",
+            "freq",
+            F.regexp_replace("word", "(.)", SENTINEL + "$1" + SENTINEL).alias(
+                "seg"
+            ),
         ),
-        # pinned: seg0 is the corpus-sized word_freq aggregate — round 1's
-        # pair count AND the round-1 re-segmentation both consume it, and
-        # without the pin each ran the corpus tokenize+agg separately
-        # (round 14, guide §5 recompute)
+        eager=False,
     )
-    if pin:
-        seg = seg.localCheckpoint(eager=False)
     merge_steps: list[DataFrame] = []
     for step in range(1, n_merges + 1):
         syms = seg.select(
@@ -104,9 +107,9 @@ def _run_bpe(
         # the re-segmentation's broadcast build below — unpinned, each
         # consumer re-ran the round's explode+aggregate (round 14: the
         # per-round pair count was computed twice; guide §5)
-        best = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1)
-        if pin:
-            best = best.localCheckpoint(eager=False)
+        best = pin(
+            pairs.orderBy(F.col("n").desc(), "a", "b").limit(1), eager=False
+        )
         merge_steps.append(
             best.select(
                 F.lit(step).alias("step"),
@@ -116,7 +119,9 @@ def _run_bpe(
                 F.col("n").cast("bigint").alias("n"),
             )
         )
-        seg = (
+        # vocab-sized, but 8 rounds of explode+agg+join would stack into
+        # one deep plan — cut lineage per round like connected_components
+        seg = pin(
             # LEFT join against the (≤1-row) winner, not a crossJoin: if a
             # round finds no candidate pair (vocabulary fully merged / all
             # single-symbol words) the winner frame is EMPTY, and a cross
@@ -149,10 +154,8 @@ def _run_bpe(
                     ),
                     F.col("seg"),
                 ).alias("seg"),
-            )
-            # vocab-sized, but 8 rounds of explode+agg+join would stack into
-            # one deep plan — cut lineage per round like connected_components
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return merge_steps, seg
 

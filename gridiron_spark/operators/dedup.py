@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gridiron_spark.io.tables import pin
+
 
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct word k-grams of lower(text); documents shorter than k words
@@ -287,9 +289,9 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    # exact verification restricted to the candidate pairs (a band collision
-    # with zero shared shingles has jaccard 0 — the inner count-join drops
-    # it, as the threshold would anyway)
+    # exact verification restricted to the candidate pairs, in the set form
+    # (a band collision with zero shared shingles scores jaccard 0, which
+    # the threshold drops)
     return (
         pair_intersection_counts(sh, candidates=cand)
         .filter(F.col("jaccard") >= threshold)
@@ -321,7 +323,6 @@ def prefix_filtered_pairs(
     text_col: str = "text",
     threshold: float = 0.7,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard pairs via AllPairs/PPJoin prefix filtering —
     the 100 TB form of :func:`ngram_jaccard_pairs`, identical output.
@@ -343,23 +344,20 @@ def prefix_filtered_pairs(
     verification. Extra cost: one global frequency aggregate (map-side
     combinable) and one rank window per doc — both linear.
 
-    ``materialize`` pins the exploded shingle rows (lazy localCheckpoint),
-    which this DAG references ~6× (sizes, frequencies, prefix ranking,
+    The exploded shingle rows are pinned (lazy :func:`pin`): this DAG
+    references them ~6× (sizes, frequencies, prefix ranking,
     verification). Round 12 measured a MEMORY_AND_DISK persist LOSING to
     recompute at sf0.1 (6.7 s vs 5.3 s); round 14 re-measured under the
     64k AQE floor + fan_out with a localCheckpoint instead and the trade
     flipped hard (full pipeline solo medians at sf0.1: 8.20 s unpinned →
     4.09 s pinned — each of the 6 shingle re-derivations paid a scan +
-    window + distinct), so the default is ON. At 100 TB the pin is
-    |corpus|×~shingles rows of (id, 3-gram) — the thing a production run
-    materializes to a staged side-car anyway; pass False to keep the
-    zero-storage form.
+    window + distinct). At 100 TB the pin is |corpus|×~shingles rows of
+    (id, 3-gram) — the thing a production run materializes to a staged
+    side-car anyway.
     """
     from pyspark.sql import Window
 
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = pin(shingle_rows(docs, id_col, text_col, shingle_k), eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -402,28 +400,11 @@ def prefix_filtered_pairs(
     )
 
 
-def _pin(df: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize an iteration frame: localCheckpoint by default (fast,
-    executor-local — right for local mode), reliable checkpoint(dir) when
-    requested so executor loss on a cluster re-reads pinned state instead
-    of failing the job. Same contract as
-    operators/ordered.grouped_running_sum(reliable_checkpoint=...)."""
-    if reliable:
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable_checkpoint=True requires "
-                "spark.sparkContext.setCheckpointDir(...)"
-            )
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every node in the pair graph — min-label
     propagation to a fixpoint. This is the *cluster assignment* step a dedup
@@ -434,38 +415,33 @@ def connected_components(
     counting label changes. Diameter bounds iterations — near-dup graphs are
     shallow (duplicate clusters, not long chains). At 100 TB scale swap the
     naive propagation for the large-star/small-star algorithm (same
-    fixpoint, provably fewer rounds) and localCheckpoint each round to cut
-    lineage; the result contract is identical, which is what the oracle
-    (recursive-CTE transitive closure) checks.
+    fixpoint, provably fewer rounds); the result contract is identical,
+    which is what the oracle (recursive-CTE transitive closure) checks.
     """
-    # localCheckpoint: iterative algorithms re-execute their full upstream
+    # pin each round: iterative algorithms re-execute their full upstream
     # lineage on EVERY action otherwise (each convergence check would re-run
-    # pair generation — measured 14s → 3s on the sf0.1 corpus). On a cluster
-    # use reliable checkpoint(dir) so executor loss can't drop the state.
-    edges = _pin(
+    # pair generation — measured 14s → 3s on the sf0.1 corpus).
+    edges = pin(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
-        .distinct(),
-        reliable_checkpoint,
+        .distinct()
     )
-    labels = _pin(
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node")),
-        reliable_checkpoint,
+        .withColumn("label", F.col("node"))
     )
     for _ in range(max_iter):
         prop = (
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "label")
         )
-        new_labels = _pin(
+        new_labels = pin(
             labels.unionByName(prop)
             .groupBy("node")
-            .agg(F.min("label").alias("label")),
-            reliable_checkpoint,
+            .agg(F.min("label").alias("label"))
         )
         changed = (
             new_labels.alias("n")
@@ -485,7 +461,6 @@ def connected_components_star(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """(doc_id, cluster_id) via alternating large-star/small-star rounds —
     the O(log² n)-round connected-components algorithm (Kiveris et al.,
@@ -504,20 +479,17 @@ def connected_components_star(
     minimum in O(log² n) rounds vs the naive propagation's O(diameter) —
     the difference that matters on long chains (path graphs converge in ~7
     rounds at n=100 where min-label needs 99). Per round: two shuffles
-    (groupBy u, then join), localCheckpoint to cut the iterative lineage
-    (reliable checkpoint(dir) on a real cluster).
+    (groupBy u, then join), and a :func:`pin` to cut the iterative lineage.
     """
-    edges = _pin(
+    edges = pin(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        reliable_checkpoint,
+        .distinct()
     )
-    all_nodes = _pin(
+    all_nodes = pin(
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct(),
-        reliable_checkpoint,
+        .distinct()
     )
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -565,7 +537,7 @@ def connected_components_star(
 
     prev_fp = _fp(edges)
     for _ in range(max_iter):
-        new_edges = _pin(_small_star(_large_star(edges)), reliable_checkpoint)
+        new_edges = pin(_small_star(_large_star(edges)))
         fp = _fp(new_edges)
         stable = fp == prev_fp and (
             new_edges.exceptAll(edges)
@@ -915,7 +887,6 @@ def containment_prefix_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact shingle-set CONTAINMENT pairs: every ordered (contained,
     container) pair with |A∩B| / |A| ≥ threshold, A ≠ B.
@@ -937,15 +908,13 @@ def containment_prefix_pairs(
     as (tiny prefix count) × (full count) — linear in the full index, not
     quadratic in it.
 
-    ``materialize`` pins the exploded shingle rows once (lazy
-    localCheckpoint) for the ~5 references below — the same round-14
-    re-measured trade as :func:`prefix_filtered_pairs`.
+    The exploded shingle rows are pinned once (lazy :func:`pin`) for the
+    ~5 references below — the same round-14 re-measured trade as
+    :func:`prefix_filtered_pairs`.
     """
     from pyspark.sql import Window
 
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = pin(shingle_rows(docs, id_col, text_col, shingle_k), eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gridiron_spark.io.tables import pin
+
 
 def grouped_running_sum(
     df: DataFrame,
@@ -25,37 +27,27 @@ def grouped_running_sum(
     value_col: str,
     out_col: str = "running_sum",
     num_partitions: int = 16,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Inclusive running SUM(value_col) per group in (order_cols) order,
     without ever putting a whole group on one task.
 
     repartitionByRange draws sample-based boundaries over (group, ord) so
     partitions stay even; spark_partition_id is materialized immediately
-    after the exchange and the frame is checkpointed — the plan forks into
-    the local-scan and offsets branches, and two independent executions of
-    the range exchange could draw DIFFERENT boundaries. Default is a lazy
-    localCheckpoint (fast, executor-local blocks — right for local mode and
-    short-lived jobs); pass ``reliable_checkpoint=True`` on a real cluster
-    so executor loss re-reads the pinned frame from the configured
-    ``spark.sparkContext.setCheckpointDir`` storage instead of failing the
-    job mid-query. The offsets table has |partitions × groups| rows, so its
-    own prefix-sum window is free and its broadcast is bounded.
+    after the exchange and the frame is pinned (lazy :func:`pin`, reliable
+    whenever the session has a checkpoint dir) — the plan forks into the
+    local-scan and offsets branches, and two independent executions of the
+    range exchange could draw DIFFERENT boundaries. The offsets table has
+    |partitions × groups| rows, so its own prefix-sum window is free and
+    its broadcast is bounded.
     """
     gcols = list(group_cols)
     ocols = list(order_cols)
-    exchanged = df.repartitionByRange(
-        num_partitions, *gcols, *ocols
-    ).withColumn("_pid", F.spark_partition_id())
-    if reliable_checkpoint:
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "grouped_running_sum(reliable_checkpoint=True) requires "
-                "spark.sparkContext.setCheckpointDir(...) to be set"
-            )
-        srt = exchanged.checkpoint(eager=False)
-    else:
-        srt = exchanged.localCheckpoint(eager=False)
+    srt = pin(
+        df.repartitionByRange(num_partitions, *gcols, *ocols).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
+    )
     local = srt.withColumn(
         "_local_sum",
         F.sum(value_col).over(

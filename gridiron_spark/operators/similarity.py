@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.vectors import cosine, dot, norm2
-from gridiron_spark.io.tables import fan_out
+from gridiron_spark.io.tables import fan_out, pin
 
 
 def srp_signs(planes: int, dims: int) -> list[list[float]]:
@@ -342,7 +342,7 @@ def kmeans_fit(
 
     Scale shape per round: one linear assignment pass (broadcast
     centroids, rank-1 WindowGroupLimit) + one k×dims aggregate; lineage is
-    cut per round with lazy localCheckpoints exactly like the BPE loop and
+    cut per round with lazy pins exactly like the BPE loop and
     connected_components. Cost is rounds × one corpus pass — no
     corpus-sized state on the driver, ever (the fingerprint is 1 row).
     """
@@ -356,20 +356,17 @@ def kmeans_fit(
             assigned = two_level_assign(
                 emb, cents, groups=two_level_groups, probes=probes,
                 id_col=id_col,
-            ).localCheckpoint(eager=False)
-        else:
-            assigned = lloyd_assign(emb, cents, id_col).localCheckpoint(
-                eager=False
             )
+        else:
+            assigned = lloyd_assign(emb, cents, id_col)
+        assigned = pin(assigned, eager=False)
         fp = assigned.agg(
             F.bit_xor(F.xxhash64(id_col, "cluster")).alias("fp")
         ).collect()[0]["fp"]
         if fp == prev_fp:
             break
         prev_fp = fp
-        cents = quantized_lloyd_update(assigned, cents).localCheckpoint(
-            eager=False
-        )
+        cents = pin(quantized_lloyd_update(assigned, cents), eager=False)
     return cents
 
 
@@ -540,12 +537,12 @@ def semdedup_flags(
     # The assignment is referenced three times (pair-left, pair-right, and
     # the final flag join-back); without a lineage cut Spark re-runs the
     # broadcast-distance fan-out + argmin window per reference — three
-    # corpus passes. localCheckpoint materializes it once (the staged
+    # corpus passes. A pin materializes it once (the staged
     # "cluster assignment" artifact a real curation pipeline would persist
     # anyway).
     if assign is None:
         assign = lloyd_assign(emb, centroids, id_col)
-    a = assign.localCheckpoint(eager=False)
+    a = pin(assign, eager=False)
     if prune_rank_window is None and exact_cap is not None:
         max_cluster = a.groupBy("cluster").count().agg(
             F.max("count").alias("m")

@@ -16,7 +16,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gridiron_spark.sampling import sample_digest
+from gridiron_spark.sampling import sample_exact_n
 
 PLAY_KEY = ("gameId", "playId")
 
@@ -192,8 +192,7 @@ class Pool:
         pool = self.scan()
         for f in filters:
             pool = pool.filter(f)
-        keys = pool.select(*key_cols).distinct()
-        sampled = keys.orderBy(sample_digest(key_cols, seed), *key_cols).limit(n)
+        sampled = sample_exact_n(pool, key_cols, n, seed)
         full = self.scan()  # frames come from the unfiltered pool, like the reference
         return full.join(F.broadcast(sampled), on=list(key_cols), how="inner")
 

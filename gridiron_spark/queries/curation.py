@@ -123,7 +123,7 @@ _PAIRS_SCHEMA = (
 def _mine_candidate_pairs(spark, sf_dir):
     """(doc_a, doc_b, est_jaccard, jaccard) for every LSH candidate pair —
     the production MinHash config (16 hashes, 4 bands of 4), exact Jaccard
-    via the count-based verifier. Signatures join back by doc_id, so nothing
+    via the set-form candidate verifier. Signatures join back by doc_id, so nothing
     is recomputed per pair."""
     from gridiron_spark.operators.dedup import (
         band_keys,

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gridiron_spark.io.tables import load_table
+from gridiron_spark.io.tables import load_table, pin
 from gridiron_spark.queries import register
 
 _SEED = 42
@@ -125,7 +125,7 @@ def mllib_minhash_sim_join(spark, sf_dir):
     pathology (shingle_rows note 2): approxSimilarityJoin explodes the
     hash tables internally, and projection collapse re-evaluates the whole
     shingle → HashingTF → 8-table minhash UDF chain once per exploded row
-    (8×/doc). The fix is a localCheckpoint barrier on the featurized frame
+    (8×/doc). The fix is a pin barrier on the featurized frame
     (plus fanning the single-file scan out to all cores): ~6 s per fresh
     invocation (re-featurizing included), ~1 s with features warm — the
     join itself was never the problem. What remains structural
@@ -147,10 +147,10 @@ def mllib_minhash_sim_join(spark, sf_dir):
     # through its exploded candidate shuffle — without the select, each
     # side's shingle arrays (the widest column, unused downstream) ride
     # both the checkpoint and the hash-bucket exchange.
-    feats = (
+    feats = pin(
         tf.transform(shingled)
-        .select("doc_id", "features")
-        .localCheckpoint(eager=False)
+        .select("doc_id", "features"),
+        eager=False,
     )
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes", seed=_SEED, numHashTables=8
@@ -196,7 +196,7 @@ def mllib_minhash_banded(spark, sf_dir):
     doc = load_table(spark, sf_dir, "documents")
     # one materialization of the shingle derivation feeds BOTH the hash
     # pipeline and the verification joins below (it is referenced 3×)
-    shingled = _shingled(spark, doc).localCheckpoint(eager=False)
+    shingled = pin(_shingled(spark, doc), eager=False)
     tf = HashingTF(
         inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
@@ -209,10 +209,10 @@ def mllib_minhash_banded(spark, sf_dir):
     # needs neither the 2^18-dim sparse vectors nor the shingle arrays,
     # and a checkpoint pins every column it carries — without the select
     # both rode the pinned blocks and the explode.
-    hashed = (
+    hashed = pin(
         model.transform(feats)
-        .select("doc_id", "hashes")
-        .localCheckpoint(eager=False)
+        .select("doc_id", "hashes"),
+        eager=False,
     )
     # hashes: array of 8 one-element vectors -> 8 bigints, banded 2×4
     hv = hashed.select(

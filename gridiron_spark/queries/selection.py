@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gridiron_spark.io.tables import load_table
+from gridiron_spark.io.tables import load_table, pin
 from gridiron_spark.operators.lm import (
     BUCKETS,
     dsir_logratio_table,
@@ -302,10 +302,10 @@ def curriculum_schedule(spark, sf_dir):
             "mix"
         ),
     )
-    srt = (
+    srt = pin(
         b.repartitionByRange(_range_parts(spark), "phase", "mix", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     local = srt.select(
         "doc_id",
@@ -395,8 +395,8 @@ def quantile_normalize_scores(spark, sf_dir):
     rows — a |sources|·|partitions| table. The final position lookup is
     a plain equi-join on the pooled rank. Two range exchanges + one
     equi-join total; no per-source single-partition sort, so the Zipf
-    source-size skew never concentrates in one task. localCheckpoint
-    pins each exchange's sample-derived range boundaries before the plan
+    source-size skew never concentrates in one task. A pin freezes
+    each exchange's sample-derived range boundaries before the plan
     forks over partition ids (the ranged_global_sort determinism note).
     """
     from pyspark.sql import Window as W
@@ -407,10 +407,10 @@ def quantile_normalize_scores(spark, sf_dir):
         "doc_id", "source", F.expr(_SCORE_SPARK).cast("bigint").alias("score")
     )
     # grouped global rank: ONE range exchange on (source, score, doc_id)
-    srt = (
+    srt = pin(
         sc.repartitionByRange(_range_parts(spark), "source", "score", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     local = srt.withColumn(
         "lrn",
@@ -443,10 +443,10 @@ def quantile_normalize_scores(spark, sf_dir):
         )
     )
     # pooled global rank: second range exchange, no grouping
-    psrt = (
+    psrt = pin(
         sc.repartitionByRange(_range_parts(spark), "score", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     plocal = psrt.withColumn(
         "lrn",
@@ -605,7 +605,7 @@ def epoch_shuffle_interleave(spark, sf_dir):
     hash is uniform, so range partitions are balanced BY CONSTRUCTION —
     no skew caveat), per-partition local row_number, and a broadcast
     |partitions|-row offset table cumsum'd in a bounded global window
-    (reviewed in the linter). localCheckpoint pins the sample-derived
+    (reviewed in the linter). A pin freezes the sample-derived
     range boundaries before the plan forks over partition ids. The
     decile arithmetic rides on a 1-row broadcast corpus total; the
     audit rollup is one map-side-combined aggregate over
@@ -620,10 +620,10 @@ def epoch_shuffle_interleave(spark, sf_dir):
             "ord"
         ),
     )
-    srt = (
+    srt = pin(
         doc.repartitionByRange(_range_parts(spark), "ord", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     local = srt.withColumn(
         "lrn", F.row_number().over(W.partitionBy("pid").orderBy("ord", "doc_id"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.vectors import cosine
-from gridiron_spark.io.tables import fan_out, load_table
+from gridiron_spark.io.tables import fan_out, load_table, pin
 from gridiron_spark.queries import register
 
 _QUERY_VEC_ID = 0
@@ -1379,7 +1379,7 @@ def pagerank_knn_centrality(spark, sf_dir):
     extended from one Lloyd step to an unrolled iterative algorithm; the
     oracle replays all four rounds as chained CTEs.
 
-    Scale shape: edges materialize ONCE (eager localCheckpoint — the
+    Scale shape: edges materialize ONCE (eager pin — the
     SemDeDup 3x-re-execution lesson) and each round is one
     map-side-combined aggregate on dst plus a broadcast-sized join back
     to the node list: cost is O(iters x |E|) with no lineage growth. The
@@ -1388,7 +1388,7 @@ def pagerank_knn_centrality(spark, sf_dir):
     is the IVF/LSH candidate-pair stage two queries up — the iteration
     itself never changes."""
     q, edges = _panel_knn_edges(spark, sf_dir)
-    edges = edges.localCheckpoint()  # materialize once for all rounds
+    edges = pin(edges)  # materialize once for all rounds
     nodes = q.select(F.col("vec_id").alias("v"))
     r = nodes.select("v", F.lit(_PR_SCALE).cast("bigint").alias("r"))
     for _ in range(_PR_ITERS):
@@ -1626,7 +1626,7 @@ def _triangles_over_edges(edges, *, broadcast_deg, checkpoint=False):
         .distinct()
     )
     if checkpoint:
-        und = und.localCheckpoint()
+        und = pin(und)
     deg = (
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
@@ -1653,7 +1653,7 @@ def _triangles_over_edges(edges, *, broadcast_deg, checkpoint=False):
         )
     )
     if checkpoint:
-        o = o.localCheckpoint()
+        o = pin(o)
     w1 = o.select(
         F.col("a").alias("w1_a"), F.col("b").alias("w1_b"),
         F.col("okey_b").alias("w1_ob"),
@@ -1774,7 +1774,7 @@ def kcore_decompose_knn(spark, sf_dir):
     Scale shape: each round is a linear degree aggregate plus two
     equi-joins of the edge list against the (shrinking) keep set — the
     connected-components shuffle anatomy, never a pairwise blow-up; the
-    edge list is materialized once (localCheckpoint) and only SHRINKS.
+    edge list is materialized once (pinned) and only SHRINKS.
     At corpus scale the panel generator swaps for the LSH candidate
     stage, peeling unchanged (kcore_decompose_ivf below is that swap);
     a convergence-checked variant would reuse the CC fingerprint loop
@@ -1787,12 +1787,11 @@ def _kcore_over_edges(edges):
     """Shared peel machinery: undirect (src, dst, ...) edges once, run
     _KCORE_ROUNDS degree-peel rounds, return (vec_id, deg0, in_core,
     core_deg). Consumed by the panel and corpus-grain (IVF) k-core."""
-    und = (
+    und = pin(
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
-        .distinct()
-        .localCheckpoint()  # shared generator run once; rounds only shrink
+        .distinct(),  # shared generator run once; rounds only shrink
     )
 
     def degrees(e):
@@ -1816,20 +1815,17 @@ def _kcore_over_edges(edges):
         # both join probes — without materializing each round, the final
         # plan re-derives round r-1 three times per reference (≈3^rounds
         # copies of the undirected scan; measured 2.3× wall on the IVF
-        # variant at sf0.1). localCheckpoint truncates the lineage so each
+        # variant at sf0.1). A pin truncates the lineage so each
         # round costs exactly one degree aggregate + one two-sided
         # semi-filter join over the SHRINKING edge list.
-        keep = (
-            degrees(e).filter(F.col("d") >= _KCORE_K).select("n")
-            .localCheckpoint()
-        )
+        keep = pin(degrees(e).filter(F.col("d") >= _KCORE_K).select("n"))
         e = (
             e.join(keep.withColumnRenamed("n", "ku"), e.u == F.col("ku"))
             .join(keep.withColumnRenamed("n", "kv"), e.v == F.col("kv"))
             .select("u", "v")
         )
         if r < _KCORE_ROUNDS - 1:
-            e = e.localCheckpoint()
+            e = pin(e)
     df_final = degrees(e)
     return (
         n0.join(d0.withColumnRenamed("d", "deg0"), "n")
@@ -1917,7 +1913,7 @@ def label_propagation_knn(spark, sf_dir):
     sub-component communities.
 
     Scale shape: the directed 3-NN edges symmetrize once (union+distinct,
-    localCheckpoint — no lineage growth across rounds); each round is ONE
+    pinned — no lineage growth across rounds); each round is ONE
     map-side-combined (node, label) count aggregate followed by a
     label-cardinality arg-max aggregate — the pagerank per-round shuffle
     anatomy, cost O(rounds × |E|), never pairwise. The label vector is
@@ -1939,13 +1935,12 @@ def _lpa_over_edges(edges, broadcast_labels):
     vector is panel-sized); False leaves the per-round label join to the
     planner as a plain equi-join on the node key — the corpus regime,
     where labels are corpus-sized and bucket/co-partition with edges."""
-    und = (
+    und = pin(
         edges.select("src", "dst")
         .unionAll(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct()
-        .localCheckpoint()  # symmetrize once; every round reuses it
+        .distinct(),  # symmetrize once; every round reuses it
     )
     lab = und.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").cast("bigint").alias("lab")
@@ -2760,7 +2755,7 @@ def harmonic_centrality_knn(spark, sf_dir):
 
     Scale shape: {h} rounds of iterative min-plus expansion — each
     round ONE equi-join of the current ≤{h}-hop pair set against the
-    symmetrized edge list (shared localCheckpoint, the LPA treatment)
+    symmetrized edge list (shared pin, the LPA treatment)
     followed by ONE map-side-combined (src, dst) min aggregate; the
     final rollup is one aggregate over the pair set. Pair-set size is
     bounded by |V|·(2k)^{h} (k-NN out-degree, not the corpus) — the
@@ -2782,13 +2777,12 @@ def _harmonic_over_edges(edges):
     once, run _HARM_HOPS-1 min-plus expansion rounds, return (vec_id,
     harmonic_x6, n_reached). Consumed by the panel and corpus-grain
     (IVF) harmonic centrality."""
-    ue = (
+    ue = pin(
         edges.select("src", "dst")
         .unionAll(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
     )
     cur = ue.withColumn("d", F.lit(1))
     for h in range(2, _HARM_HOPS + 1):
@@ -2907,12 +2901,11 @@ def _pagerank_over_edges(edges):
     od = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("od")
     )
-    ee = edges.select("src", "dst").join(od, "src").localCheckpoint()
-    nodes = (
+    ee = pin(edges.select("src", "dst").join(od, "src"))
+    nodes = pin(
         ee.select(F.col("src").alias("v"))
         .unionAll(ee.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()  # rebuilt lazily 2×/round otherwise
+        .distinct(),  # rebuilt lazily 2×/round otherwise
     )
     r = nodes.select("v", F.lit(_PR_SCALE).cast("bigint").alias("r"))
     for _ in range(_PR_ITERS):
@@ -3284,7 +3277,7 @@ def _cell_split_assign(spark, sf_dir, cap=_SPLIT_CAP, probes=1):
     q, assigned = _ivf_assign(spark, sf_dir, super_fac=_GIVF_SFAC)
     # referenced by the census, both remap branches, and the seed pick —
     # pin the (sample-free but 5-stage) assignment once
-    a = assigned.localCheckpoint(eager=False)
+    a = pin(assigned, eager=False)
     cells = a.groupBy("cid").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     hot = cells.filter(F.col("n") > cap).select(
         "cid", F.ceil(F.sqrt(F.col("n"))).cast("bigint").alias("s")
@@ -3377,7 +3370,7 @@ def knn_graph_cellsplit(spark, sf_dir, cap=_SPLIT_CAP):
 
     q, remap = _cell_split_assign(spark, sf_dir, cap=cap)
     # both sides of the candidate self-join read the remap — pin it once
-    a = remap.localCheckpoint(eager=False)
+    a = pin(remap, eager=False)
     cand = (
         a.alias("a")
         .join(
@@ -3494,7 +3487,7 @@ def knn_graph_cellsplit_probe(spark, sf_dir, cap=_SPLIT_CAP,
 
     q, remap = _cell_split_assign(spark, sf_dir, cap=cap, probes=probes)
     # both sides of the candidate join read the remap — pin it once
-    a = remap.localCheckpoint(eager=False)
+    a = pin(remap, eager=False)
     home = a.filter(F.col("home"))
     cand = (
         a.alias("a")
@@ -3694,14 +3687,17 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
     keys and their seed lists stay centroid-sized and broadcast;
     members re-rank only against their own cell's ≤ ceil(sqrt(n)) seeds
     with a Partial WindowGroupLimit argmin; lineage is cut per round
-    (localCheckpoint), the dedup_clusters_star iteration pattern. A
+    (pinned), the dedup_clusters_star iteration pattern. A
     1-row census collect decides termination — bounded driver I/O."""
     from pyspark.sql import Window
 
     q, assigned = _ivf_assign(spark, sf_dir, super_fac=_GIVF_SFAC)
-    cur = assigned.join(q, "vec_id").select(
-        "vec_id", "cid", F.col("cid").cast("string").alias("ck"), "qv"
-    ).localCheckpoint(eager=False)
+    cur = pin(
+        assigned.join(q, "vec_id").select(
+            "vec_id", "cid", F.col("cid").cast("string").alias("ck"), "qv"
+        ),
+        eager=False,
+    )
     for rnd in range(max_rounds):
         cells = cur.groupBy("cid", "ck").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
@@ -3751,7 +3747,7 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
         keep = cur.join(
             F.broadcast(hot.select("cid", "ck")), ["cid", "ck"], "left_anti"
         ).select("vec_id", "cid", "ck", "qv")
-        cur = split.unionByName(keep).localCheckpoint(eager=False)
+        cur = pin(split.unionByName(keep), eager=False)
     return cur.select("vec_id", "cid", "ck")
 
 
@@ -3769,7 +3765,7 @@ def knn_graph_recursive_edges(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=2,
     rmap = recursive_cell_split(spark, sf_dir, cap=cap,
                                 max_rounds=max_rounds)
     # both sides of the candidate self-join read the map — pin it once
-    a = rmap.localCheckpoint(eager=False)
+    a = pin(rmap, eager=False)
     # the shared quantized table for exact-dot scoring
     q = _quantized(spark, sf_dir)
     cand = (

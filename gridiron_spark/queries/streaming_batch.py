@@ -18,7 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.decimal_safe import dsum
-from gridiron_spark.io.tables import load_table
+from gridiron_spark.io.tables import load_table, pin
 from gridiron_spark.queries import register
 
 _FIVE_MIN_US = 5 * 60 * 1_000_000
@@ -857,7 +857,7 @@ def streaming_cdc_upsert_e2e(spark, sf_dir):
     # accumulate across bench/parity runs
     import shutil
 
-    final = final.localCheckpoint()
+    final = pin(final)
     shutil.rmtree(run, ignore_errors=True)
     return final
 
@@ -1038,7 +1038,7 @@ def streaming_incremental_dedup_e2e(spark, sf_dir):
     # pin the drained flags into Spark storage so the per-run scratch dir
     # can be reclaimed immediately (the cdc_upsert pattern: every run is a
     # real stream replay, deliberately not fingerprint-staged)
-    final = final.localCheckpoint()
+    final = pin(final)
     shutil.rmtree(run, ignore_errors=True)
     return final
 
@@ -1140,11 +1140,10 @@ def streaming_sidecar_pruned_read_e2e(spark, sf_dir):
         n_buckets=_SPR_BUCKETS,
         stats_dir=f"{run}/stats",
     )
-    stats = (
+    stats = pin(
         spark.read.parquet(f"{run}/stats")
         .select("batch_id", "n_hot_buckets", "files_read",
-                "files_prior_total")
-        .localCheckpoint()
+                "files_prior_total"),
     )
     shutil.rmtree(run, ignore_errors=True)
     return stats

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.partitions import range_parts as _range_parts
-from gridiron_spark.io.tables import fan_out, load_table
+from gridiron_spark.io.tables import fan_out, load_table, pin
 from gridiron_spark.queries import register
 
 _STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
@@ -453,7 +453,7 @@ def sequence_pack_bucketed(spark, sf_dir):
     (bucket_len, doc_id) — sample-based boundaries keep partitions even —
     then local row_number per (partition, bucket) plus a broadcast
     prefix-sum offset table of |partitions × buckets| rows (the
-    ranged_global_sort technique, per group). localCheckpoint pins the
+    ranged_global_sort technique, per group). A pin freezes the
     sampled range boundaries before the plan forks over them.
 
     Output is one row per packed sequence with exact integer padding
@@ -471,10 +471,10 @@ def sequence_pack_bucketed(spark, sf_dir):
         ),
         F.least(n_tok, F.lit(128)).alias("n_tokens"),
     )
-    srt = (
+    srt = pin(
         d.repartitionByRange(_range_parts(spark), "bucket_len", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     local = srt.withColumn(
         "local_rn",
@@ -1009,10 +1009,10 @@ def winnow_overlap_pairs(spark, sf_dir):
     # the fingerprint frame feeds BOTH the DF-cap aggregate and the kept
     # join — without a lineage cut the char-gram explode + windowed-min
     # pipeline runs twice per invocation (round 13; the mllib entries'
-    # measured no-CSE-under-reuse pattern). localCheckpoint materializes
+    # measured no-CSE-under-reuse pattern). A pin materializes
     # it once; the fingerprint table is corpus-linear, the same artifact
     # a production MOSS index persists anyway.
-    wf = winnow_fingerprint(spark, sf_dir).localCheckpoint(eager=False)
+    wf = pin(winnow_fingerprint(spark, sf_dir), eager=False)
     freq = (
         wf.groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("df"))

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from gridiron_spark.functions.decimal_safe import dec, dmean, dsum
 from gridiron_spark.functions.partitions import range_parts as _range_parts
-from gridiron_spark.io.tables import fan_out, load_table
+from gridiron_spark.io.tables import fan_out, load_table, pin
 from gridiron_spark.queries import register
 
 def _revenue():
@@ -980,15 +980,15 @@ def ranged_global_sort(spark, sf_dir):
     # pid is materialized ONCE, in the map stage right after the range
     # exchange — using spark_partition_id() directly inside the window spec
     # would re-evaluate it after the window's own hash exchange (wrong ids).
-    # localCheckpoint freezes the (sample-derived, run-varying) range
+    # A pin freezes the (sample-derived, run-varying) range
     # boundaries: the plan branches into local_rn and offsets below, and
     # two independent executions of repartitionByRange could draw DIFFERENT
     # boundaries, silently skewing seq — nondeterministic partition
     # identity must be pinned before a plan forks over it.
-    srt = (
+    srt = pin(
         o.repartitionByRange(_range_parts(spark), "o_orderdate", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("pid", F.spark_partition_id()),
+        eager=False,
     )
     local = srt.select(
         "o_orderkey",

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from gridiron_spark.functions.decimal_safe import dsum
+from gridiron_spark.io.tables import pin
 
 # canonical micro-batch event schema (events-shaped; ts as a proper timestamp
 # — the lake's nano longs are converted at the stream source boundary)
@@ -503,7 +504,7 @@ def cdc_upsert_available_now(
     DuckDB oracle state the result as one batch SQL.
 
     The parquet overwrite is the dependency-free stand-in for a Delta/
-    Iceberg MERGE INTO: the merged frame is materialized (localCheckpoint)
+    Iceberg MERGE INTO: the merged frame is materialized (io.tables.pin)
     BEFORE the overwrite truncates the directory it was read from — the
     same read-then-replace hazard a real table format solves with
     snapshots. State stays one row per key, so each merge is a
@@ -538,7 +539,7 @@ def cdc_upsert_available_now(
                 "n_events",
             )
             batch_state = batch_state.unionByName(existing)
-        merged = (
+        merged = pin(
             batch_state.groupBy("user_id")
             .agg(
                 F.max("last").alias("last"),
@@ -550,8 +551,7 @@ def cdc_upsert_available_now(
                 F.col("last.last_event_id").alias("last_event_id"),
                 F.col("last.last_value").alias("last_value"),
                 "n_events",
-            )
-            .localCheckpoint()  # materialize BEFORE overwriting the source
+            ),  # materialize BEFORE overwriting the source
         )
         merged.write.mode("overwrite").parquet(state_dir)
 
@@ -885,9 +885,9 @@ def minhash_sidecar_dedup_available_now(
         # bb: the doc-grain base rows are the band_idx == 0 slice (every
         # non-empty doc emits bands 0..bands-1), and batch emptiness falls
         # out of the hot-bucket collect below.
-        bb = banded(
-            minhash_signature_df(shingle_rows(batch_df), num_hashes)
-        ).localCheckpoint()
+        bb = pin(
+            banded(minhash_signature_df(shingle_rows(batch_df), num_hashes))
+        )
         # the arriving batch's collision footprint: ≤ n_buckets ints — a
         # bounded driver collect that turns into partition pruning below
         hot_buckets = [
@@ -1034,9 +1034,9 @@ def minhash_sidecar_dedup_available_now(
             # banded side-car state: one file per bucket per batch — the
             # hash repartition keys every bucket's rows to ONE task, and
             # the explicit width (= hot-bucket count, known from the
-            # collect above) keeps the exchange at exactly as many tasks
-            # as output files instead of spark.sql.shuffle.partitions
-            # mostly-empty ones
+            # collect above) keeps the exchange at most as wide as the
+            # output file count (colliding buckets share a task) instead
+            # of spark.sql.shuffle.partitions mostly-empty ones
             bb.repartition(len(hot_buckets), "bucket").write.partitionBy(
                 "bucket"
             ).mode("overwrite").parquet(f"{sig_dir}/batch={batch_id}")

@@ -130,15 +130,6 @@ def test_prefix_filtered_equals_full_inverted_index(spark, docs):
     assert len(prefix) == 25  # the planted pairs
 
 
-def test_prefix_materialize_flag_same_results(spark, docs):
-    """The persist knob is a plan choice, never a semantic one."""
-    from gridiron_spark.operators.dedup import prefix_filtered_pairs
-
-    base = _pairs(prefix_filtered_pairs(docs, threshold=0.5))
-    mat = _pairs(prefix_filtered_pairs(docs, threshold=0.5, materialize=True))
-    assert mat == base
-
-
 def test_prefix_filter_shrinks_index(spark, docs):
     """The prefix index must be strictly smaller than the full inverted
     index — that reduction is the whole point of the scale path."""
@@ -356,34 +347,6 @@ def test_dup_span_coverage_interval_union(spark, tmp_path):
     assert bool(got[2].keep) is True
     # doc 3: clean
     assert got[3].covered_tokens == 0 and got[3].dup_coverage_frac == 0.0
-
-
-def test_cc_reliable_checkpoint(spark, tmp_path):
-    """Both CC variants accept reliable_checkpoint for cluster deployments:
-    without a configured dir they fail loudly; with one, the fixpoint is
-    unchanged."""
-    import pytest as _pytest
-
-    from gridiron_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (12, 12)], "doc_a bigint, doc_b bigint"
-    )
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with _pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(pairs, reliable_checkpoint=True).count()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    for fn in (connected_components, connected_components_star):
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in fn(pairs, reliable_checkpoint=True).collect()
-        }
-        assert got >= want - {(12, 12)}, (fn.__name__, got)
 
 
 def test_cluster_split_never_straddles(spark):

@@ -15,7 +15,7 @@ import re
 import pytest
 
 from gridiron_spark.queries import catalog
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, use_identity_pin
 
 _CATALOG = catalog()
 
@@ -223,30 +223,43 @@ def test_semdedup_single_assignment_pass(spark):
     assert plan.count("SortMergeJoin") <= 2, plan
 
 
-def test_bpe_loop_stays_vocab_bounded(spark):
+def test_bpe_loop_stays_vocab_bounded(spark, monkeypatch):
     """Each BPE round must pick its winner through TakeOrderedAndProject
     (limit-1 top-k, never a full sort) and join nothing corpus-sized: no
     sort-merge joins, no cartesian products anywhere in the 8-round plan.
 
-    The per-round structure is asserted on the pin=False build: the
-    production form (round 14) lazily checkpoints each round's 1-row
-    winner so its two consumers share one computation, which truncates
-    the STATIC plan at the checkpoints — the pins change where lineage is
-    cut, not which operators run, so the structural guard inspects the
-    untruncated dataflow and the production plan keeps the join-shape
-    assertions."""
+    The per-round structure is asserted on the unpinned build (io.tables.pin
+    swapped for the identity): the production form (round 14) lazily pins
+    each round's 1-row winner so its two consumers share one computation,
+    which truncates the STATIC plan at the pins — the pins change where
+    lineage is cut, not which operators run, so the structural guard
+    inspects the untruncated dataflow and the production plan keeps the
+    join-shape assertions. Unpinned, every round's segmentation re-derives
+    the earlier rounds' winners, so the winner count is checked per step:
+    each step's plan must be rooted at its round's limit-1 top-k."""
     from gridiron_spark.io.tables import load_table
     from gridiron_spark.operators.bpe import _run_bpe, word_freq
 
     doc = load_table(spark, SF_ORACLE, "documents")
-    steps, _ = _run_bpe(word_freq(doc), 8, pin=False)
-    out = steps[0]
-    for m in steps[1:]:
-        out = out.unionAll(m)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with monkeypatch.context() as m:
+        use_identity_pin(m)
+        steps, _ = _run_bpe(word_freq(doc), 8)
+        out = steps[0]
+        for step in steps[1:]:
+            out = out.unionAll(step)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        roots = [
+            st._jdf.queryExecution().executedPlan().toString().splitlines()[1]
+            for st in steps
+        ]
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    assert plan.count("TakeOrderedAndProject") == 8, plan
+    assert len(roots) == 8
+    for root in roots:
+        assert root.startswith("+- TakeOrderedAndProject(limit=1,"), root
+    assert set(re.findall(r"TakeOrderedAndProject\((limit=\d+)", plan)) == {
+        "limit=1"
+    }, plan
     # production (pinned) plan: same join-shape guarantees
     pplan = _plan_of(spark, "bpe_merge_sequence")
     assert "CartesianProduct" not in pplan, pplan

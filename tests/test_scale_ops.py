@@ -398,45 +398,6 @@ def test_grouped_running_sum_matches_naive_window(spark):
     assert a == b
 
 
-def test_grouped_running_sum_reliable_checkpoint(spark, tmp_path):
-    """reliable_checkpoint=True pins the range boundaries through a
-    fault-tolerant checkpoint dir (cluster deployments); without a
-    configured dir it must fail loudly, not silently fall back to
-    executor-local blocks."""
-    import pandas as pd
-    import pytest as _pytest
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from gridiron_spark.operators.ordered import grouped_running_sum
-
-    pdf = pd.DataFrame(
-        {"g": ["a"] * 20 + ["b"] * 12, "ord": list(range(32)),
-         "v": [(i * 7) % 5 for i in range(32)]}
-    )
-    df = spark.createDataFrame(pdf)
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with _pytest.raises(ValueError, match="setCheckpointDir"):
-            grouped_running_sum(
-                df, ["g"], ["ord"], "v", reliable_checkpoint=True
-            )
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    got = grouped_running_sum(
-        df, ["g"], ["ord"], "v", out_col="cs", num_partitions=4,
-        reliable_checkpoint=True,
-    )
-    want = df.withColumn(
-        "cs",
-        F.sum("v").over(
-            W.partitionBy("g").orderBy("ord").rowsBetween(W.unboundedPreceding, 0)
-        ),
-    )
-    assert sorted((r.g, r.ord, r.cs) for r in got.collect()) == sorted(
-        (r.g, r.ord, r.cs) for r in want.collect()
-    )
-
-
 def test_bloom_prefilter_no_false_negatives_and_bounded_fp(spark):
     """The bloom guarantee: zero false negatives (every true match passes
     the sketch), and with m=8192/k=3 at this build cardinality the
