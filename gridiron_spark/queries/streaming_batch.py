@@ -635,22 +635,6 @@ _LATE_WM_US = 60 * 1_000_000        # 1-minute watermark delay (the SLA)
 _LATE_BEHIND_US = 600 * 1_000_000   # planted rows arrive ≥10 min behind max
 
 
-def _late_stage_key(sf_dir: str) -> str:
-    """The late-arrival stage's fully-keyed path — the ONE place its
-    kind/params live, so tooling that must invalidate the stage (e.g.
-    scripts/probe_late_data.py --cold-stage) can never drift from the
-    entry's own key."""
-    from gridiron_spark.io.staging import stage_path
-
-    return stage_path(
-        sf_dir,
-        "stream_late_v2",
-        "events",
-        params={"behind_us": _LATE_BEHIND_US, "late_mod": 97,
-                "carrier_mod": 1009},
-    )
-
-
 def _stage_late_arrival_events(spark, sf_dir) -> str:
     """Three-file stream stage with a controlled arrival order:
 
@@ -674,9 +658,15 @@ def _stage_late_arrival_events(spark, sf_dir) -> str:
     import os
     import shutil
 
-    from gridiron_spark.io.staging import ensure_stage
+    from gridiron_spark.io.staging import ensure_stage, stage_path
 
-    stage = _late_stage_key(sf_dir)
+    stage = stage_path(
+        sf_dir,
+        "stream_late_v2",
+        "events",
+        params={"behind_us": _LATE_BEHIND_US, "late_mod": 97,
+                "carrier_mod": 1009},
+    )
 
     def build(dst: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
@@ -770,8 +760,8 @@ def streaming_late_data_e2e(spark, sf_dir):
 
     state_partitions=4 (not the drain default 32): this entry pays the
     per-trigger state-store fixed cost THREE times (maxFilesPerTrigger=1
-    semantics), and scripts/probe_late_data.py measured that cost
-    load-coupled — under a synthetic all-core load, 32 partitions x 3
+    semantics), and the round-13 loaded-box probe (BASELINE.md) measured
+    that cost load-coupled — under a synthetic all-core load, 32 partitions x 3
     triggers read 12-40 s (per-batch state commit sums to 23-93 s across
     providers) while 4 partitions read 4.7-5.0 s with state commit at
     ~0.8 s. ~39k tiny state rows need no more than 4 stores; on a real

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from gridiron_spark.io.tables import aqe_min_partition_size
+
 
 def get_spark(
     app_name: str = "gridiron_spark",
@@ -37,20 +39,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing is BYTE-based: with parallelismFirst (default on)
-        # it still packs post-shuffle partitions up to minPartitionSize
-        # (default 1m), which collapses compute-heavy-but-byte-light stages
-        # (pair scoring over quantized vectors, per-shingle md5) to ONE task.
-        # A 64k floor keeps such stages parallel; at cluster scale shuffle
-        # partitions dwarf any floor so the setting is inert there — and it
-        # stays env-tunable for non-local deployments (optimization guide
-        # §2.2/§2.5). Chosen by a measured sweep (OPTIMIZATION_r13.md):
-        # 16k wins iterative-join loops (kcore peel 15.0 s @1m → 6.5 s)
-        # but floods tiny per-round window loops with 32-task stages (BPE
-        # 4.9 → 7.0 s); 64k keeps both near their best.
+        # AQE's byte-based coalescing floor, chosen in io.tables
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            aqe_min_partition_size(),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for any pandas-UDF boundary (10-100x over row-at-a-time).

@@ -1,4 +1,4 @@
-"""io.tables seams: ``pin`` (the one materialization point) and ``fan_out``.
+"""io.tables: ``pin`` (the one materialization point) and the size parser.
 
 ``pin`` picks local vs reliable from the session (a checkpoint dir set or
 not), so every pinning operator must return the same rows under a local
@@ -9,7 +9,6 @@ form may survive the loss of an executor holding pinned blocks.
 from __future__ import annotations
 
 import os
-import re
 import subprocess
 import sys
 import textwrap
@@ -212,22 +211,12 @@ def test_reliable_pin_survives_executor_loss(tmp_path):
     assert out[out.index("RELIABLE_SAME") + 1] == "True", proc.stdout
 
 
-def test_fan_out_target_accepts_size_suffixes(spark, monkeypatch):
-    """SPARK_GRAFT_FAN_OUT_TARGET_BYTES takes the same byte-size syntax as
-    Spark's size confs: "20k" is the 20 KiB default, not a crash."""
-    from gridiron_spark.io.tables import _parse_size, fan_out
+def test_parse_size_accepts_size_suffixes():
+    """Spark byte-size confs (the AQE floor, file split sizes) are read with
+    Spark's suffix syntax: "20k" is 20 KiB, not a crash."""
+    from gridiron_spark.io.tables import _parse_size
 
     assert _parse_size("20k", 1) == 20 << 10
     assert _parse_size("4MB", 1) == 4 << 20
     assert _parse_size("1234", 1) == 1234
     assert _parse_size("lots", 7) == 7
-    docs = load_table(spark, SF_SMALL, "documents")
-    monkeypatch.delenv("SPARK_GRAFT_FAN_OUT_TARGET_BYTES", raising=False)
-
-    def plan():  # wide parallelism: the one-file scan always reaches the parse
-        s = fan_out(docs, parallelism=64)._jdf.queryExecution().optimizedPlan()
-        return re.sub(r"#\d+", "#", s.toString())
-
-    default = plan()
-    monkeypatch.setenv("SPARK_GRAFT_FAN_OUT_TARGET_BYTES", "20k")
-    assert plan() == default
