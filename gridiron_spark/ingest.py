@@ -12,9 +12,16 @@ partition, and let the distributed writer produce the
 - **one file per game** (fixed-name ``tracking.parquet`` in the reference) is
   file-count control: repartition by the partition key so each game's rows
   land in a single task → a single file. At 100 TB a single 10-GB game file
-  would be wrong, so the repartition is optional (``coalesce_partitions``) and
-  ``maxRecordsPerFile`` caps the worst case;
-- the driver never materializes data; summaries are one aggregate job.
+  would be wrong, so the repartition is optional (``one_file_per_partition``)
+  and ``maxRecordsPerFile`` caps the worst case;
+- the driver never materializes data; the summary is observed on the write,
+  so a CSV ingest scans its input once (3 jobs: header read, write's 2 stages).
+
+CSV columns arrive as text and the normalizer's ``try_cast`` types them. A
+schema-inference pass never typed a mixed-header glob anyway: it skipped only
+the first file's header, so the other flavour's header was a data row and
+every column inferred as string, while a one-file upsert inferred ``time`` as
+a timestamp and stored it reformatted (milliseconds and ``Z`` lost).
 """
 
 from __future__ import annotations
@@ -23,7 +30,7 @@ import logging
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gridiron_spark.schema.normalize import normalize
@@ -36,8 +43,8 @@ SEASON_COL = "season"
 
 @dataclass(frozen=True)
 class IngestSummary:
-    """The reference's human-assertion report (src/ingest.py:46-57), computed
-    in one distributed aggregate pass instead of driver-side pandas."""
+    """The reference's human-assertion report (src/ingest.py:46-57), observed
+    on the distributed write instead of computed in driver-side pandas."""
 
     n_rows: int
     n_games: int
@@ -48,9 +55,7 @@ class IngestSummary:
 def derive_season(df: DataFrame, game_col: str = "gameId") -> DataFrame:
     """season := first 4 chars of gameId (reference src/ingest.py:73-74 —
     the partition key is computed from data, not stored in the source)."""
-    return df.withColumn(
-        SEASON_COL, F.substring(F.col(game_col).cast("string"), 1, 4)
-    )
+    return df.withColumn(SEASON_COL, F.substring(F.col(game_col).cast("string"), 1, 4))
 
 
 class LakeIngestor:
@@ -71,87 +76,82 @@ class LakeIngestor:
         self.pool = str(pool)
         self.max_records_per_file = max_records_per_file
         self.one_file_per_partition = one_file_per_partition
+        self.part_cols = list(self.schema.partition_by) or ["gameId"]
 
     # -- read + normalize ---------------------------------------------------
 
     def load_and_normalize(
         self, input_glob: str | Path, source_format: str = "csv"
     ) -> DataFrame:
-        """Permissive scan (reference src/ingest.py:23: inferred schema,
-        errors tolerated) then the canonical normalize projection. Spark globs
-        natively; schema inference samples the files once. ``source_format``
-        extends the reference's CSV-only intake with JSON-lines — the common
-        raw shape for large document/training corpora — through the SAME
-        alias-resolution and cast pipeline (the normalizer works on any
-        inferred schema, so a format is one reader branch, not a new path).
-        ``parquet``/``orc`` intake covers lake-to-lake re-ingest (self-
-        describing schemas; the normalizer still applies alias resolution
-        and canonical casts)."""
+        """Permissive scan (reference src/ingest.py:23: errors tolerated) then
+        the canonical normalize projection. Spark globs natively; CSV columns
+        arrive as text for the normalizer's casts, so only the header is read
+        here. ``source_format`` adds JSON-lines (the common raw shape of
+        document/training corpora; no header, so its schema is inferred) and
+        ``parquet``/``orc`` (lake-to-lake re-ingest) through the SAME alias
+        resolution and casts: a format is one reader branch, not a new path."""
         from pyspark.errors.exceptions.captured import AnalysisException
 
         if source_format not in ("csv", "json", "parquet", "orc"):
             raise ValueError(f"unsupported source format: {source_format!r}")
+        path = str(input_glob)
         try:
             if source_format in ("parquet", "orc"):
-                raw = self.spark.read.format(source_format).load(str(input_glob))
+                raw = self.spark.read.format(source_format).load(path)
             elif source_format == "json":
-                raw = self.spark.read.option("mode", "PERMISSIVE").json(
-                    str(input_glob)
-                )
+                raw = self.spark.read.option("mode", "PERMISSIVE").json(path)
             else:
-                raw = (
-                    self.spark.read.option("header", True)
-                    .option("inferSchema", True)
-                    .option("mode", "PERMISSIVE")
-                    .csv(str(input_glob))
-                )
+                raw = self.spark.read.csv(path, header=True, mode="PERMISSIVE")
         except AnalysisException as e:
             if "PATH_NOT_FOUND" in str(e):
-                # reference errors cleanly when the glob matches nothing
-                # (src/ingest.py:90-94)
+                # reference errors cleanly on an empty glob (src/ingest.py:90-94)
                 raise FileNotFoundError(f"no input files match {input_glob}") from e
             raise
         return normalize(raw, self.schema)
 
-    # -- write ---------------------------------------------------------------
+    # -- summary / write -----------------------------------------------------
 
-    def write(self, df: DataFrame) -> None:
-        part_cols = list(self.schema.partition_by) or ["gameId"]
-        if SEASON_COL in part_cols and SEASON_COL not in df.columns:
+    def summarize(self, df: DataFrame) -> tuple[DataFrame, Observation]:
+        """Lay ``df`` out as the writer consumes it; attach the summary as an
+        ``Observation`` the write fills. It allows no DISTINCT, so distinct
+        counts are set sizes that skip NULL keys (bounded by one input's
+        plays). Not before the repartition: a header-only input then fails."""
+        if SEASON_COL in self.part_cols and SEASON_COL not in df.columns:
             df = derive_season(df)
         if self.one_file_per_partition:
             # co-locate each game in one task → one file per partition dir
-            df = df.repartition(*[F.col(c) for c in part_cols])
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("maxRecordsPerFile", self.max_records_per_file)
-            .partitionBy(*part_cols)
-            .parquet(self.pool)
-        )
-
-    # -- summary / dry-run ----------------------------------------------------
-
-    def summarize(self, df: DataFrame) -> IngestSummary:
-        row = df.agg(
+            df = df.repartition(*[F.col(c) for c in self.part_cols])
+        keyed = F.col("gameId").isNotNull() & F.col("playId").isNotNull()
+        play = F.when(keyed, F.struct("gameId", "playId"))
+        obs = Observation()
+        observed = df.observe(
+            obs,
             F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("gameId").alias("n_games"),
-            F.countDistinct("gameId", "playId").alias("n_plays"),
+            F.size(F.collect_set("gameId")).alias("n_games"),
+            F.size(F.collect_set(play)).alias("n_plays"),
             F.max("frameId").alias("max_frame"),
-        ).first()
-        return IngestSummary(row.n_rows, row.n_games, row.n_plays, row.max_frame)
+        )
+        return observed, obs
+
+    def write(self, df: DataFrame) -> None:
+        """Write a frame laid out by :meth:`summarize` to the pool."""
+        df.write.mode("overwrite").options(
+            partitionOverwriteMode="dynamic",
+            maxRecordsPerFile=self.max_records_per_file,
+        ).partitionBy(*self.part_cols).parquet(self.pool)
 
     def ingest(
-        self,
-        input_glob: str | Path,
-        dry_run: bool = False,
-        source_format: str = "csv",
+        self, input_glob: str | Path, dry_run: bool = False, source_format: str = "csv"
     ) -> IngestSummary:
+        """One scan: normalize, observe the summary, write (a dry run writes
+        to the ``noop`` sink). An empty input leaves every partition as is."""
         df = self.load_and_normalize(input_glob, source_format=source_format)
-        summary = self.summarize(df)
+        observed, obs = self.summarize(df)
+        if dry_run:
+            observed.write.format("noop").mode("overwrite").save()
+        else:
+            self.write(observed)
+        summary = IngestSummary(**obs.get)
         if summary.n_rows == 0:
             log.warning("ingest: 0 rows matched %s — nothing written", input_glob)
-            return summary
-        if not dry_run:
-            self.write(df)
         return summary

@@ -153,8 +153,8 @@ def ingest_normalize_roundtrip(spark, sf_dir):
     permissive casts, and constant defaults (reference src/ingest.py:27-43)
     — externally evidenced by round-trip: orders is re-spelled into
     camelCase alias headers and written to CSV, then re-ingested through
-    the REAL LakeIngestor.load_and_normalize path (inferred-schema
-    permissive scan → canonical projection), and the per-status aggregate
+    the REAL LakeIngestor.load_and_normalize path (permissive all-text
+    scan → canonical projection), and the per-status aggregate
     is hash-compared against the ORIGINAL table. Any mis-resolved alias,
     lossy cast, or missing default flips a count, the decimal sum, or
     n_defaulted (o_channel is absent from the source, so every row must

@@ -36,8 +36,8 @@ def _permissive_cast(col, target) -> "F.Column":
 
     Integral targets route through double first: tracking CSVs carry
     float-formatted ids like ``"4365.0"`` (FIXTURES.md §1), which a direct
-    string→int cast rejects but float→int truncates — the same behavior as
-    the reference's inferred-float-then-cast pipeline.
+    string→int cast rejects but float→int truncates. CSV ingest reads every
+    column as text, so the source text is always what gets cast here.
     """
     if target.simpleString() in _INTEGRAL:
         return col.try_cast("double").try_cast(target)

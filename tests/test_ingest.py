@@ -3,13 +3,15 @@ overwrite, dry-run summary — the reference's core #1 (SURVEY.md §3.1)."""
 
 from __future__ import annotations
 
+import logging
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from gridiron_spark.fixtures import write_tracking_csvs
-from gridiron_spark.ingest import LakeIngestor, derive_season
+from gridiron_spark.ingest import IngestSummary, LakeIngestor, derive_season
 from gridiron_spark.schema.normalize import normalize
 from gridiron_spark.schema.registry import TableSchema
 
@@ -87,19 +89,25 @@ def test_partition_layout_and_season_derivation(lake):
         assert len(files) == 1, f"{g} has {len(files)} files"
 
 
-def test_ingest_summary(spark, fixture_dir):
-    ing = LakeIngestor(spark, SCHEMA_PATH, "/tmp/unused-pool")
+def test_ingest_summary(spark, fixture_dir, tmp_path):
+    """A dry run creates no pool and reports what the real ingest reports."""
+    pool = tmp_path / "pool"
+    ing = LakeIngestor(spark, SCHEMA_PATH, pool)
     s = ing.ingest(f"{fixture_dir}/*.csv", dry_run=True)
+    assert not pool.exists()
     # 2 flavors × 2 games × 5 plays × 50 frames × 23 entities
     assert s.n_rows == 2 * 2 * 5 * 50 * 23
     assert s.n_games == 4
     assert s.n_plays == 20
     assert s.max_frame == 50
+    assert ing.ingest(f"{fixture_dir}/*.csv") == s
 
 
 def test_partition_overwrite_upsert(spark, fixture_dir, tmp_path_factory):
     """Re-ingesting one game's file replaces that partition and leaves the
-    rest of the lake untouched (reference src/ingest.py:82-87 semantics)."""
+    rest of the lake untouched (reference src/ingest.py:82-87 semantics).
+    The re-ingested games keep ``time`` as the CSV's text, in the format of
+    the untouched games (a schema-inferring upsert stored it reformatted)."""
     pool = tmp_path_factory.mktemp("pool-upsert")
     ing = LakeIngestor(spark, SCHEMA_PATH, pool)
     ing.ingest(f"{fixture_dir}/*.csv")
@@ -113,6 +121,75 @@ def test_partition_overwrite_upsert(spark, fixture_dir, tmp_path_factory):
     assert after.count() == n_before
     games_after = {r.gameId for r in after.select("gameId").distinct().collect()}
     assert games_after == games_before
+
+    src = pd.read_csv(fixture_dir / "tracking_camel.csv", dtype=str)
+    touched = {int(g) for g in src.gameId}
+    times = after.select("gameId", "time").distinct().collect()
+    assert {(r.gameId, r.time) for r in times if r.gameId in touched} == {
+        (int(g), t) for g, t in zip(src.gameId, src.time)
+    }
+    untouched = {r.time for r in times if r.gameId not in touched}
+    assert untouched and {r.time for r in times if r.gameId in touched} == untouched
+
+
+def _lake_files(pool: Path) -> dict[str, list[tuple[str, int, int]]]:
+    """game dir -> [(file name, size, mtime_ns)] of its parquet files."""
+    out = {}
+    for d in pool.glob("season=*/gameId=*"):
+        stats = [(f.name, f.stat()) for f in d.glob("*.parquet")]
+        out[d.name] = sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats)
+    return out
+
+
+def _last_job_id(spark) -> int:
+    """Newest job id in the status store. Ids, not the store's size: it keeps
+    only ``spark.ui.retainedJobs`` jobs, so in a long session its size stops
+    growing."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    return store.jobsList(None).apply(0).jobId()  # newest first
+
+
+def test_empty_input_leaves_lake_untouched(spark, lake, fixture_dir, tmp_path, caplog):
+    """A header-only CSV summarizes to zeros, warns, and rewrites no game."""
+    ing = LakeIngestor(spark, SCHEMA_PATH, lake)
+    before = _lake_files(lake)
+    empty = tmp_path / "empty.csv"
+    header = (fixture_dir / "tracking_camel.csv").read_text().splitlines()[0]
+    empty.write_text(header + "\n")
+    with caplog.at_level(logging.WARNING, logger="gridiron_spark.ingest"):
+        summary = ing.ingest(str(empty))
+    assert summary == IngestSummary(0, 0, 0, None)
+    assert "nothing written" in caplog.text
+    assert len(before) == 4 and _lake_files(lake) == before
+
+
+def test_summary_matches_distinct_counts(spark, fixture_dir, tmp_path):
+    """The observed summary equals count / countDistinct / max over the
+    normalized input, including rows whose key fails its cast (NULL)."""
+    src = pd.read_csv(fixture_dir / "tracking_camel.csv", dtype=str)
+    src.loc[0, "playId"] = "not-a-play"
+    src.loc[1, "gameId"] = "not-a-game"
+    bad = str(tmp_path / "bad_keys.csv")
+    src.to_csv(bad, index=False)
+    ing = LakeIngestor(spark, SCHEMA_PATH, tmp_path / "pool")
+    row = ing.load_and_normalize(bad).agg(
+        F.count(F.lit(1)),
+        F.countDistinct("gameId"),
+        F.countDistinct("gameId", "playId"),
+        F.max("frameId"),
+    ).first()
+    assert ing.ingest(bad, dry_run=True) == IngestSummary(*row)
+
+
+def test_ingest_is_one_scan(spark, fixture_dir, tmp_path):
+    """Round-trip guard: an ingest runs at most 3 Spark jobs (the CSV
+    header read and the write's two stages), so no extra scan creeps back."""
+    ing = LakeIngestor(spark, SCHEMA_PATH, tmp_path / "pool")
+    before = _last_job_id(spark)
+    ing.ingest(f"{fixture_dir}/*.csv")
+    assert 1 <= _last_job_id(spark) - before <= 3
 
 
 def test_derive_season(spark):
