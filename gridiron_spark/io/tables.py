@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -293,3 +293,12 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager)
     return df.localCheckpoint(eager)
+
+
+def observed_pin(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly :func:`pin` ``df``; return it with the named aggregate
+    ``metrics`` over its rows, computed by the pin's own job (a fresh
+    ``Observation`` per call: one can be attached only once)."""
+    obs = Observation()
+    pinned = pin(df.observe(obs, *metrics))
+    return pinned, obs.get

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gridiron_spark.io.tables import pin
+from gridiron_spark.io.tables import observed_pin, pin
 
 
 def word_shingles(text: Column, k: int = 3) -> Column:
@@ -411,16 +411,19 @@ def connected_components(
     pipeline needs after pair generation (keep one doc per cluster).
 
     Iterative dataflow done Spark-style: each round is one join + one
-    min-aggregate over the (bounded) frontier; convergence is detected by
-    counting label changes. Diameter bounds iterations — near-dup graphs are
-    shallow (duplicate clusters, not long chains). At 100 TB scale swap the
-    naive propagation for the large-star/small-star algorithm (same
-    fixpoint, provably fewer rounds); the result contract is identical,
-    which is what the oracle (recursive-CTE transitive closure) checks.
+    min-aggregate over the (bounded) frontier, pinned by
+    :func:`observed_pin` with the label sum observed: labels only fall over
+    a fixed node set, so an unchanged sum is an exact fixpoint test, and
+    none within ``max_iter`` rounds raises. Diameter bounds iterations —
+    near-dup graphs are shallow (duplicate clusters, not long chains). At
+    100 TB scale swap the naive propagation for the large-star/small-star
+    algorithm (same fixpoint, provably fewer rounds); the result contract
+    is identical, which is what the oracle (recursive-CTE transitive
+    closure) checks.
     """
     # pin each round: iterative algorithms re-execute their full upstream
-    # lineage on EVERY action otherwise (each convergence check would re-run
-    # pair generation — measured 14s → 3s on the sf0.1 corpus).
+    # lineage on EVERY action otherwise (each round would re-run pair
+    # generation — measured 14s → 3s on the sf0.1 corpus).
     edges = pin(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
@@ -428,31 +431,29 @@ def connected_components(
         )
         .distinct()
     )
-    labels = pin(
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, before = observed_pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
+        .withColumn("label", F.col("node")),
+        label_sum,
     )
     for _ in range(max_iter):
         prop = (
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "label")
         )
-        new_labels = pin(
+        labels, after = observed_pin(
             labels.unionByName(prop)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label")),
+            label_sum,
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if after == before:
             break
+        before = after
+    else:
+        raise RuntimeError(f"connected_components: no fixpoint within max_iter={max_iter}")
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -479,18 +480,20 @@ def connected_components_star(
     minimum in O(log² n) rounds vs the naive propagation's O(diameter) —
     the difference that matters on long chains (path graphs converge in ~7
     rounds at n=100 where min-label needs 99). Per round: two shuffles
-    (groupBy u, then join), and a :func:`pin` to cut the iterative lineage.
+    (groupBy u, then join), and an :func:`observed_pin` that cuts the
+    lineage and fingerprints the new edge set. Nodes come from all pairs,
+    self-pairs included, as in the min-label form.
     """
-    edges = pin(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    uv = pin(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).distinct()
     )
-    all_nodes = pin(
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    all_nodes = uv.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    # Convergence: an order-independent set fingerprint (count + bit_xor of
+    # xxhash64) rides each round's pin; only when two consecutive
+    # fingerprints agree does ONE exact set-difference pass confirm (so a
+    # hash collision can delay convergence detection, never fake it).
+    fingerprint = (F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h"))
+    edges, fp = observed_pin(uv.filter(F.col("u") != F.col("v")), *fingerprint)
 
     def _large_star(e: DataFrame) -> DataFrame:
         adj = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -523,35 +526,22 @@ def connected_components_star(
         )
         return hooked.filter(F.col("u") != F.col("v")).distinct()
 
-    # Convergence: a cheap order-independent set fingerprint (count +
-    # bit_xor of xxhash64) per round — one agg, no join — and only when two
-    # consecutive fingerprints agree, ONE exact set-difference pass confirms
-    # (so a hash collision can delay convergence detection, never fake it).
-    # The previous both-ways exceptAll every round was ~40% of round cost.
-    def _fp(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    prev_fp = _fp(edges)
     for _ in range(max_iter):
-        new_edges = pin(_small_star(_large_star(edges)))
-        fp = _fp(new_edges)
-        stable = fp == prev_fp and (
+        new_edges, new_fp = observed_pin(_small_star(_large_star(edges)), *fingerprint)
+        stable = new_fp == fp and (
             new_edges.exceptAll(edges)
             .unionByName(edges.exceptAll(new_edges))
             .limit(1)
             .count()
             == 0
         )
-        edges, prev_fp = new_edges, fp
+        edges, fp = new_edges, new_fp
         if stable:
             break
+    else:
+        raise RuntimeError(f"connected_components_star: no fixpoint within max_iter={max_iter}")
     # fixpoint edges are star edges (node -> component root); roots label
-    # themselves. The min-agg is a no-op at the fixpoint and the best
-    # available label if max_iter stopped a pathological graph early.
+    # themselves. The min-agg keeps one label per node.
     labels = (
         edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
         .groupBy("doc_id")

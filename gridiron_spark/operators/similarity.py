@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.vectors import cosine, dot, norm2
-from gridiron_spark.io.tables import fan_out, pin
+from gridiron_spark.io.tables import fan_out, observed_pin, pin
 
 
 def srp_signs(planes: int, dims: int) -> list[list[float]]:
@@ -330,10 +330,9 @@ def kmeans_fit(
     the assignment reaches a fixpoint. Returns the final (cluster, cvec)
     table.
 
-    Convergence is a 1-row driver fingerprint per round (the
-    connected_components pattern, operators/dedup.py): an order-free
-    ``BIT_XOR(xxhash64(id, cluster))`` over the assignment (xor, not sum:
-    overflow-free under ANSI mode) — when it repeats,
+    Convergence is an order-free ``BIT_XOR(xxhash64(id, cluster))``
+    fingerprint of the assignment (xor, not sum: overflow-free under ANSI
+    mode) observed by its own pin (:func:`observed_pin`) — when it repeats,
     the update would reproduce the same centroids (quantized means are a
     pure function of the assignment; empty-cluster fallback chains), so
     every further round is a no-op. That is what makes the FIXED-round
@@ -342,9 +341,9 @@ def kmeans_fit(
 
     Scale shape per round: one linear assignment pass (broadcast
     centroids, rank-1 WindowGroupLimit) + one k×dims aggregate; lineage is
-    cut per round with lazy pins exactly like the BPE loop and
-    connected_components. Cost is rounds × one corpus pass — no
-    corpus-sized state on the driver, ever (the fingerprint is 1 row).
+    cut per round by the assignment's pin (one job) and a lazy centroid
+    pin. Cost is rounds × one corpus pass — no corpus-sized state on the
+    driver, ever (the fingerprint is one value).
     """
     cents = seed_centroids(emb, k, id_col)
     prev_fp = None
@@ -359,10 +358,9 @@ def kmeans_fit(
             )
         else:
             assigned = lloyd_assign(emb, cents, id_col)
-        assigned = pin(assigned, eager=False)
-        fp = assigned.agg(
-            F.bit_xor(F.xxhash64(id_col, "cluster")).alias("fp")
-        ).collect()[0]["fp"]
+        assigned, fp = observed_pin(
+            assigned, F.bit_xor(F.xxhash64(id_col, "cluster")).alias("fp")
+        )
         if fp == prev_fp:
             break
         prev_fp = fp

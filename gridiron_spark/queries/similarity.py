@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gridiron_spark.functions.vectors import cosine
-from gridiron_spark.io.tables import fan_out, load_table, pin
+from gridiron_spark.io.tables import fan_out, load_table, observed_pin, pin
 from gridiron_spark.queries import register
 
 _QUERY_VEC_ID = 0
@@ -472,11 +472,13 @@ def kmeans_ctes(k: int, rounds: int) -> str:
     quantized_lloyd_update) → c{i} with the empty-cluster fallback to the
     previous centroid. A fixed unroll replays Spark's early-exit exactly
     because rounds past the assignment fixpoint recompute identical
-    centroids. Returns the body after ``WITH``; callers append their
+    centroids. Every CTE is MATERIALIZED: c{i} reads c{i-1} twice, so an
+    inlining engine (DuckDB 1.0) expands the chain ~2^rounds-fold and runs
+    out of memory. Returns the body after ``WITH``; callers append their
     final SELECT against c{rounds} / a{rounds}."""
     parts = [
         f"""
-c0 AS (
+c0 AS MATERIALIZED (
     SELECT vec_id AS cluster,
            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
     FROM embeddings WHERE vec_id < {k}
@@ -485,7 +487,7 @@ c0 AS (
     for i in range(1, rounds + 1):
         parts.append(
             f""",
-a{i} AS (
+a{i} AS MATERIALIZED (
     SELECT vec_id, cluster FROM (
         SELECT e.vec_id, c.cluster,
                ROW_NUMBER() OVER (
@@ -496,7 +498,7 @@ a{i} AS (
         FROM embeddings e CROSS JOIN c{i - 1} c
     ) WHERE rn = 1
 ),
-u{i} AS (
+u{i} AS MATERIALIZED (
     SELECT a.cluster, u.i AS dim,
            (CAST(SUM(CAST(FLOOR(CAST(e.embedding[u.i + 1] AS DOUBLE)
                                 * 1048576.0) AS BIGINT)) AS DOUBLE)
@@ -505,7 +507,7 @@ u{i} AS (
          unnest(range(0, len(e.embedding))) AS u(i)
     GROUP BY a.cluster, u.i
 ),
-c{i} AS (
+c{i} AS MATERIALIZED (
     SELECT p.cluster, COALESCE(n.cvec, p.cvec) AS cvec
     FROM c{i - 1} p LEFT JOIN (
         SELECT cluster, list(val ORDER BY dim) AS cvec
@@ -592,7 +594,7 @@ d AS (
            e.embedding AS v
     FROM embeddings e CROSS JOIN c{_KMEANS_ROUNDS} c
 ),
-a AS (
+a AS MATERIALIZED (
     SELECT vec_id, cluster, dist2, v FROM (
         SELECT vec_id, cluster, dist2, v,
                ROW_NUMBER() OVER (
@@ -3687,8 +3689,8 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
     keys and their seed lists stay centroid-sized and broadcast;
     members re-rank only against their own cell's ≤ ceil(sqrt(n)) seeds
     with a Partial WindowGroupLimit argmin; lineage is cut per round
-    (pinned), the dedup_clusters_star iteration pattern. A
-    1-row census collect decides termination — bounded driver I/O."""
+    (pinned), the dedup_clusters_star iteration pattern. The census pin
+    observes its max cell (one job), which decides termination."""
     from pyspark.sql import Window
 
     q, assigned = _ivf_assign(spark, sf_dir, super_fac=_GIVF_SFAC)
@@ -3699,11 +3701,11 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
         eager=False,
     )
     for rnd in range(max_rounds):
-        cells = cur.groupBy("cid", "ck").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n")
+        cells, census = observed_pin(
+            cur.groupBy("cid", "ck").agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+            F.max("n").alias("mx"),
         )
-        max_cell = cells.agg(F.max("n")).first()[0]
-        if max_cell is None or max_cell <= cap:
+        if census["mx"] is None or census["mx"] <= cap:
             break
         hot = cells.filter(F.col("n") > cap).select(
             "cid", "ck", F.ceil(F.sqrt(F.col("n"))).cast("bigint").alias("s")

@@ -40,14 +40,36 @@ def checkpoint_dir(spark, tmp_path):
     sc.setCheckpointDir(None)
 
 
+def last_job_id(spark) -> int:
+    """Newest job id in the status store. Ids, not the store's size: it keeps
+    only ``spark.ui.retainedJobs`` jobs, so in a long session its size stops
+    growing."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    return store.jobsList(None).apply(0).jobId()  # newest first
+
+
 def use_identity_pin(monkeypatch) -> None:
     """Swap io.tables.pin for the identity in every package module that
-    imported it, so operators build their unpinned (untruncated) plans."""
+    imported it, so operators build their unpinned (untruncated) plans.
+    observed_pin is swapped too, for an unpinned form that computes the
+    same metrics with ``df.agg``: with no pin job, an Observation would
+    never be filled and reading it would block forever."""
     import sys
 
     from gridiron_spark.io import tables
 
-    real = tables.pin
+    swaps = {
+        "pin": (tables.pin, lambda df, eager=True: df),
+        "observed_pin": (
+            tables.observed_pin,
+            lambda df, *metrics: (df, df.agg(*metrics).first().asDict()),
+        ),
+    }
     for name, mod in list(sys.modules.items()):
-        if name.startswith("gridiron_spark") and getattr(mod, "pin", None) is real:
-            monkeypatch.setattr(mod, "pin", lambda df, eager=True: df)
+        if not name.startswith("gridiron_spark"):
+            continue
+        for attr, (real, fake) in swaps.items():
+            if getattr(mod, attr, None) is real:
+                monkeypatch.setattr(mod, attr, fake)

@@ -182,6 +182,23 @@ def test_star_cc_long_chain_converges(spark):
     assert got == {**{i: 1 for i in range(1, 41)}, 100: 100, 101: 100, 102: 100}
 
 
+def test_cc_raises_when_max_iter_runs_out(spark):
+    """A 40-node path needs 39 min-label rounds: with the default max_iter
+    of 20, connected_components must raise instead of returning a split
+    cluster; the star form raises the same way when its own cap is hit."""
+    from gridiron_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    chain = [(i, i + 1) for i in range(1, 40)]
+    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="connected_components: .*max_iter=20"):
+        connected_components(pairs)
+    with pytest.raises(RuntimeError, match="connected_components_star: .*max_iter=1"):
+        connected_components_star(pairs, max_iter=1)
+
+
 def test_simhash_agg_form_equals_scalar_form(spark, docs):
     """The exploded-aggregation plan (simhash_df) and the scalar Column
     expression (simhash32) are the same function — values must agree."""

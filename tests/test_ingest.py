@@ -14,6 +14,7 @@ from gridiron_spark.fixtures import write_tracking_csvs
 from gridiron_spark.ingest import IngestSummary, LakeIngestor, derive_season
 from gridiron_spark.schema.normalize import normalize
 from gridiron_spark.schema.registry import TableSchema
+from tests.conftest import last_job_id
 
 SCHEMA_PATH = Path(__file__).parent.parent / "gridiron_spark/configs/tracking.yaml"
 
@@ -141,16 +142,6 @@ def _lake_files(pool: Path) -> dict[str, list[tuple[str, int, int]]]:
     return out
 
 
-def _last_job_id(spark) -> int:
-    """Newest job id in the status store. Ids, not the store's size: it keeps
-    only ``spark.ui.retainedJobs`` jobs, so in a long session its size stops
-    growing."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    store = sc.statusStore()
-    return store.jobsList(None).apply(0).jobId()  # newest first
-
-
 def test_empty_input_leaves_lake_untouched(spark, lake, fixture_dir, tmp_path, caplog):
     """A header-only CSV summarizes to zeros, warns, and rewrites no game."""
     ing = LakeIngestor(spark, SCHEMA_PATH, lake)
@@ -187,9 +178,9 @@ def test_ingest_is_one_scan(spark, fixture_dir, tmp_path):
     """Round-trip guard: an ingest runs at most 3 Spark jobs (the CSV
     header read and the write's two stages), so no extra scan creeps back."""
     ing = LakeIngestor(spark, SCHEMA_PATH, tmp_path / "pool")
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     ing.ingest(f"{fixture_dir}/*.csv")
-    assert 1 <= _last_job_id(spark) - before <= 3
+    assert 1 <= last_job_id(spark) - before <= 3
 
 
 def test_derive_season(spark):

@@ -1,4 +1,5 @@
-"""io.tables: ``pin`` (the one materialization point) and the size parser.
+"""io.tables: ``pin`` (the one materialization point), ``observed_pin``
+(a pin that also reports metrics from its own job) and the size parser.
 
 ``pin`` picks local vs reliable from the session (a checkpoint dir set or
 not), so every pinning operator must return the same rows under a local
@@ -19,8 +20,8 @@ import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from gridiron_spark.io.tables import load_table
-from tests.conftest import SF_ORACLE, SF_SMALL, use_identity_pin
+from gridiron_spark.io.tables import load_table, observed_pin, pin
+from tests.conftest import SF_ORACLE, SF_SMALL, last_job_id, use_identity_pin
 
 
 def _prefix(spark):
@@ -80,7 +81,20 @@ def _bpe(spark):
     return [*steps, seg]
 
 
-_CC_WANT = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+def _kmeans(spark):
+    from gridiron_spark.operators.similarity import kmeans_fit
+
+    return [kmeans_fit(load_table(spark, SF_SMALL, "embeddings"), k=8, rounds=4)]
+
+
+def _cell_split(spark):
+    from gridiron_spark.queries.similarity import _RSPLIT_CAP, recursive_cell_split
+
+    # at this cap and scale the second split round runs (test_semdedup_bpe)
+    return [recursive_cell_split(spark, SF_ORACLE, cap=_RSPLIT_CAP, max_rounds=2)]
+
+
+_CC_WANT = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 12)}
 
 
 def _check_cc(spark, rows):
@@ -108,6 +122,8 @@ PINNING_OPERATORS = {
     "connected_components_star": (_cc_star, _check_cc),
     "grouped_running_sum": (_running_sum, _check_running_sum),
     "run_bpe": (_bpe, None),
+    "kmeans_fit": (_kmeans, None),
+    "recursive_cell_split": (_cell_split, None),
 }
 
 
@@ -134,6 +150,32 @@ def test_pin_mode_never_changes_rows(spark, name, monkeypatch, request):
     assert reliable == local, name
     if check is not None:
         check(spark, local)
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable", "empty"])
+def test_observed_pin_is_exact_and_adds_no_job(spark, mode, request):
+    """observed_pin returns exact metrics and every row, and submits no job
+    beyond the pin's own — with a local pin, a reliable pin, and on an empty
+    frame (which yields the metrics of no rows, not a hang)."""
+    if mode == "reliable":
+        request.getfixturevalue("checkpoint_dir")
+    n = 0 if mode == "empty" else 1000
+
+    def frame():
+        return (
+            spark.range(0, n, 1, 4)
+            .groupBy((F.col("id") % 7).alias("g"))
+            .agg(F.sum("id").alias("s"))
+        )
+
+    before = last_job_id(spark)
+    pin(frame())
+    plain = last_job_id(spark) - before
+    before = last_job_id(spark)
+    df, got = observed_pin(frame(), F.count(F.lit(1)).alias("n"), F.sum("s").alias("s"))
+    assert last_job_id(spark) - before <= plain
+    assert got == ({"n": 0, "s": None} if n == 0 else {"n": 7, "s": 499500})
+    assert df.count() == got["n"]
 
 
 _EXECUTOR_LOSS = textwrap.dedent(
