@@ -6,10 +6,11 @@ segmentations, sink round-trip lakes). This module owns the two invariants
 every stage needs:
 
 1. **The key encodes everything the artifact depends on** — stage kind,
-   every operator parameter (hashed), the sf_dir, and a content fingerprint
-   of the source parquet (size + nanosecond mtime). Editing a threshold or
-   band config without bumping a version string can therefore never alias a
-   stale artifact: the params hash changes, the stage rebuilds.
+   every operator parameter and the package's own source (hashed together),
+   the sf_dir, and a content fingerprint of the source parquet (size +
+   nanosecond mtime). Editing a threshold, a band config or the code of a
+   stage producer can therefore never alias a stale artifact: the params
+   hash changes, the stage rebuilds.
 2. **Materialization is atomic** — the artifact is written to a tmp sibling
    and ``os.rename``d into the keyed path, so a concurrent reader (driver
    run vs pytest) either sees the complete ``_SUCCESS``-gated directory or
@@ -20,9 +21,11 @@ every stage needs:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import shutil
+from pathlib import Path
 from typing import Callable
 
 STAGE_ROOT = "/tmp/gridiron_sink_stage"
@@ -42,12 +45,29 @@ def source_fingerprint(sf_dir: str, table: str) -> str:
         return "nostat"
 
 
+def source_tree_digest(root: Path) -> str:
+    """md5 over every ``.py`` file under ``root``: relative path and bytes,
+    in sorted path order."""
+    h = hashlib.md5()
+    for path in sorted(root.rglob("*.py")):
+        h.update(path.relative_to(root).as_posix().encode() + b"\0")
+        h.update(path.read_bytes() + b"\0")
+    return h.hexdigest()
+
+
+@functools.cache
+def code_digest() -> str:
+    """Digest of the package's own sources, computed once per process."""
+    return source_tree_digest(Path(__file__).resolve().parents[1])
+
+
 def params_hash(params: dict | None) -> str:
     """Deterministic 8-hex digest of the operator parameters baked into a
-    staged artifact. Keys sort, values repr — any config edit (threshold,
-    shingle size, band layout, merge count) changes the digest and
+    staged artifact, and of the code that produced it. Keys sort, values
+    repr — any config edit (threshold, shingle size, band layout, merge
+    count) or any edit to the package's sources changes the digest and
     therefore the stage key."""
-    blob = repr(sorted((params or {}).items())).encode()
+    blob = repr((code_digest(), sorted((params or {}).items()))).encode()
     return hashlib.md5(blob).hexdigest()[:8]
 
 
@@ -113,9 +133,10 @@ def prune_stale_variants(stage: str) -> None:
     the driver corpus's live stage out from under a concurrent reader —
     Spark lists files at plan time and reads at task time, so a
     cross-corpus prune is a FileNotFoundException window, and alternating
-    corpora (scale_validation's x1/x3/x10 dirs) would thrash-rebuild each
-    other's artifacts. Variants of OTHER corpora are left alone; only the
-    same corpus's stale params/fingerprints are reclaimed."""
+    corpora (the catalog profiler's x1/x3/x10 scale dirs) would
+    thrash-rebuild each other's artifacts. Variants of OTHER corpora are
+    left alone; only the same corpus's stale params/fingerprints are
+    reclaimed."""
     base = os.path.basename(stage)
     fields = base.split("--")
     if len(fields) < 4:

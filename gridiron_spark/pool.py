@@ -27,7 +27,10 @@ class Pool:
     def __init__(self, spark: SparkSession, path: str | Path):
         self.spark = spark
         self.path = str(path)
-        if not Path(self.path).exists():
+        # through Hadoop's FileSystem, so file://, s3a:// and hdfs:// lakes
+        # resolve the way Spark's own reads will
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
             raise FileNotFoundError(f"pool not found: {self.path}")
 
     def scan(self) -> DataFrame:

@@ -486,7 +486,7 @@ def bucketed_join_roundtrip(spark, sf_dir):
     )
     stage = stage_path(
         sf_dir,
-        "bucketed_order_join_v1",
+        "bucketed_order_join",
         "orders",
         params={
             "buckets": _BUCKETS,
@@ -600,7 +600,7 @@ def sink_minhash_sidecar_roundtrip(spark, sf_dir):
         shingle_rows,
     )
 
-    stage = stage_path(sf_dir, "minhash_sidecar_v1", "documents")
+    stage = stage_path(sf_dir, "minhash_sidecar", "documents")
     doc = load_table(spark, sf_dir, "documents")
     ensure_stage(
         stage,

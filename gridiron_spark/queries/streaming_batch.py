@@ -192,10 +192,10 @@ def _stage_events(spark, sf_dir) -> str:
     # Keyed through io/staging so the key carries the SOURCE FINGERPRINT
     # (size + ns-mtime of events.parquet): a regenerated lake at the same
     # path can never alias a stale stream stage while the oracle reads
-    # fresh data. "v2" marks the stage layout (µs-precision ts_us).
+    # fresh data; the params hash carries the code that wrote the layout.
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
-    stage = stage_path(sf_dir, "stream_events_v2", "events")
+    stage = stage_path(sf_dir, "stream_events", "events")
     return ensure_stage(
         stage,
         lambda p: load_table(spark, sf_dir, "events")
@@ -217,7 +217,7 @@ def _stage_documents(spark, sf_dir) -> str:
     rebuilds the stream stage instead of replaying stale rows."""
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
-    stage = stage_path(sf_dir, "stream_docs_v1", "documents")
+    stage = stage_path(sf_dir, "stream_docs", "documents")
     return ensure_stage(
         stage,
         lambda p: load_table(spark, sf_dir, "documents")
@@ -239,7 +239,7 @@ def _stage_documents_sharded(spark, sf_dir, shards: int = 4) -> str:
     pin)."""
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
-    stage = stage_path(sf_dir, f"stream_docs_sharded{shards}_v2", "documents")
+    stage = stage_path(sf_dir, f"stream_docs_sharded{shards}", "documents")
     return ensure_stage(
         stage,
         lambda p: load_table(spark, sf_dir, "documents")
@@ -269,7 +269,7 @@ def _stage_documents_mod_sharded(
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
     stage = stage_path(
-        sf_dir, f"stream_docs_modshard{shards}_v1", "documents",
+        sf_dir, f"stream_docs_modshard{shards}", "documents",
         params={"max_doc_id": max_doc_id},
     )
 
@@ -662,7 +662,7 @@ def _stage_late_arrival_events(spark, sf_dir) -> str:
 
     stage = stage_path(
         sf_dir,
-        "stream_late_v2",
+        "stream_late",
         "events",
         params={"behind_us": _LATE_BEHIND_US, "late_mod": 97,
                 "carrier_mod": 1009},

@@ -785,10 +785,7 @@ def _staged_segmentations(spark, sf_dir, split: str | None = None):
 
     stage = stage_path(
         sf_dir, "bpe_seg", "documents",
-        # fmt 2 = wrapped-sentinel segmentation (the round-10 prefix-
-        # collision fix); re-keys away any artifact trained pre-fix
-        params={"n_merges": _BPE_N_MERGES, "split": split or "full",
-                "fmt": 2},
+        params={"n_merges": _BPE_N_MERGES, "split": split or "full"},
     )
     train = load_table(spark, sf_dir, "documents")
     if split == "even":

@@ -32,6 +32,16 @@ def test_probe_and_listings(pool):
     assert plays == [50, 100, 150, 200, 250]
 
 
+def test_pool_accepts_hadoop_uris(spark, pool, tmp_path):
+    """A ``file://`` URI names the same lake as its plain path; a missing
+    lake still raises, under either spelling."""
+    uri = Pool(spark, f"file://{pool.path}")
+    assert uri.games() == pool.games()
+    for missing in (tmp_path / "no_lake", f"file://{tmp_path}/no_lake"):
+        with pytest.raises(FileNotFoundError):
+            Pool(spark, missing)
+
+
 def test_probe_fails_on_empty_pool(spark, tmp_path):
     """probe() must be a real liveness check: an empty (schema-only) pool
     returns False, not a vacuous True."""

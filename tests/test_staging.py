@@ -33,6 +33,31 @@ def test_params_change_forces_new_key(tmp_path):
     assert a == c  # dict ordering is canonicalized
 
 
+def test_code_digest_change_forces_new_key(tmp_path, monkeypatch):
+    """Editing a stage producer's code, with params and source unchanged,
+    must re-key its stage: the old code's artifact is never read back."""
+    sf = _touch_source(tmp_path)
+    keys = set()
+    for digest in ("old-code", "new-code"):
+        monkeypatch.setattr(staging, "code_digest", lambda d=digest: d)
+        keys.add(staging.stage_path(sf, "cluster_map", "documents",
+                                    params={"threshold": 0.5}))
+    assert len(keys) == 2
+
+
+def test_source_tree_digest_tracks_py_edits(tmp_path):
+    """The package digest moves with any ``.py`` edit, and only with those."""
+    pkg = tmp_path / "pkg"
+    (pkg / "ops").mkdir(parents=True)
+    (pkg / "ops" / "cc.py").write_text("ROUNDS = 20\n")
+    (pkg / "notes.txt").write_text("a")
+    before = staging.source_tree_digest(pkg)
+    (pkg / "notes.txt").write_text("b")
+    assert staging.source_tree_digest(pkg) == before
+    (pkg / "ops" / "cc.py").write_text("ROUNDS = 21\n")
+    assert staging.source_tree_digest(pkg) != before
+
+
 def test_params_hash_deterministic_and_short():
     h = staging.params_hash({"bands": 4, "rows_per_band": 4})
     assert h == staging.params_hash({"rows_per_band": 4, "bands": 4})
@@ -89,9 +114,9 @@ def test_prune_removes_stale_same_kind_same_corpus_variants(
     """A re-mine under a new fingerprint/params must garbage-collect older
     variants of the same kind FOR THE SAME CORPUS — /tmp must not
     accumulate dead stages — while leaving other kinds, other corpora
-    (pytest's SF_SMALL vs the driver dir, scale_validation's x1/x3/x10
-    dirs — a cross-corpus prune would rmtree a live stage out from under
-    a concurrent reader), and in-flight tmp dirs alone."""
+    (pytest's SF_SMALL vs the driver dir, the catalog profiler's x1/x3/x10
+    scale dirs — a cross-corpus prune would rmtree a live stage out from
+    under a concurrent reader), and in-flight tmp dirs alone."""
     monkeypatch.setattr(staging, "STAGE_ROOT", str(tmp_path / "stages"))
     root = str(tmp_path / "stages")
     sf = _touch_source(tmp_path)
