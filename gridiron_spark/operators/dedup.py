@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gridiron_spark.functions.vectors import matches
 from gridiron_spark.io.tables import observed_pin, pin
 
 
@@ -732,16 +733,9 @@ def incremental_minhash_flags(
         .select(
             "bid",
             "pid",
-            (
-                F.aggregate(
-                    F.zip_with(
-                        "sb", "sp", lambda x, y: (x == y).cast("int")
-                    ),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                )
-                / F.lit(float(num_hashes))
-            ).alias("est_jaccard"),
+            (matches("sb", "sp") / F.lit(float(num_hashes))).alias(
+                "est_jaccard"
+            ),
         )
     )
     hits = (

@@ -21,27 +21,46 @@ def _entity_window() -> Window:
     return Window.partitionBy(*ENTITY_KEY).orderBy("frameId")
 
 
-def is_ball() -> Column:
-    """The ball rule: null nflId, nflId==0, or team=='football'
-    (reference docs/DATA_LAKE_GUIDE.md:144-152; app/main.py:104-106)."""
-    return (
-        F.col("nflId").isNull()
-        | (F.col("nflId") == 0)
-        | (F.lower(F.col("team")) == "football")
-    )
+def _side(df: DataFrame | None) -> Column:
+    """The lowercased side column: ``playerSide`` when the frame has one,
+    else ``team`` (reference app/main.py:98)."""
+    name = "playerSide" if df is not None and "playerSide" in df.columns else "team"
+    return F.lower(F.col(name).cast("string"))
 
 
-def side_predicates(home_is_offense: bool = True) -> dict[str, Column]:
-    """Offense/defense/ball split predicates (app/main.py:97-107 rules,
-    reusable engine-side instead of driver-side pandas)."""
-    ball = is_ball()
-    off_team = "home" if home_is_offense else "away"
-    def_team = "away" if home_is_offense else "home"
-    side = F.lower(F.col("team"))
+def _ball(side: Column) -> Column:
+    return F.col("nflId").isNull() | (F.col("nflId") == 0) | (side == "football")
+
+
+def _side_values(home_is_offense: bool) -> tuple[list[str], list[str]]:
+    """The side values that mean offense and defense (app/main.py:101-103)."""
+    if home_is_offense:
+        return ["home", "offense"], ["away", "defense"]
+    return ["away", "offense"], ["home", "defense"]
+
+
+def is_ball(df: DataFrame | None = None) -> Column:
+    """The ball rule: null nflId, nflId==0, or a 'football' side
+    (reference docs/DATA_LAKE_GUIDE.md:144-152; app/main.py:104-106).
+    Pass the frame it filters so its side column resolves as in
+    :func:`side_split`."""
+    return _ball(_side(df))
+
+
+def side_predicates(
+    home_is_offense: bool = True, df: DataFrame | None = None
+) -> dict[str, Column]:
+    """Offense/defense/ball split predicates — the rows :func:`side_split`
+    labels with each side (app/main.py:97-107 rules, reusable engine-side
+    instead of driver-side pandas). Pass the frame they filter so its side
+    column resolves."""
+    side = _side(df)
+    ball = _ball(side)
+    off_vals, def_vals = _side_values(home_is_offense)
     return {
         "ball": ball,
-        "offense": ~ball & (side == off_team),
-        "defense": ~ball & (side == def_team),
+        "offense": ~ball & side.isin(off_vals),
+        "defense": ~ball & side.isin(def_vals),
     }
 
 
@@ -56,16 +75,11 @@ def side_split(df: DataFrame, home_is_offense: bool = True) -> DataFrame:
     or a literal ``football`` side (app/main.py:104-106). Pure Column
     expressions — one codegen'd projection, no shuffle.
     """
-    side_col = "playerSide" if "playerSide" in df.columns else "team"
-    side = F.lower(F.col(side_col).cast("string"))
-    ball = (
-        F.col("nflId").isNull() | (F.col("nflId") == 0) | (side == "football")
-    )
-    off_vals = ["home", "offense"] if home_is_offense else ["away", "offense"]
-    def_vals = ["away", "defense"] if home_is_offense else ["home", "defense"]
+    side = _side(df)
+    off_vals, def_vals = _side_values(home_is_offense)
     return df.withColumn(
         "side",
-        F.when(ball, "ball")
+        F.when(_ball(side), "ball")
         .when(side.isin(off_vals), "offense")
         .when(side.isin(def_vals), "defense")
         .otherwise("other"),

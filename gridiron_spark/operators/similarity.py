@@ -25,7 +25,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gridiron_spark.functions.vectors import cosine, dot, norm2
+from gridiron_spark.functions.vectors import cosine, dot, l2_sq, norm2
 from gridiron_spark.io.tables import fan_out, observed_pin, pin
 
 
@@ -48,12 +48,7 @@ def srp_bucket(vec: Column, signs: list[list[float]]) -> Column:
     """
     bucket = F.lit(0)
     for p, plane in enumerate(signs):
-        lit_plane = F.array(*[F.lit(s) for s in plane])
-        dot_p = F.aggregate(
-            F.zip_with(vec, lit_plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot_p = dot(vec, F.array(*[F.lit(s) for s in plane]))
         bucket = bucket + F.when(dot_p > 0, F.lit(1 << p)).otherwise(0)
     return bucket
 
@@ -179,23 +174,6 @@ def srp_bucket_sql(vec_expr: str, signs: list[list[float]]) -> str:
             f"x -> CAST(x[1] AS DOUBLE) * x[2])) > 0 THEN {1 << p} ELSE 0 END"
         )
     return "(" + " + ".join(terms) + ")"
-
-
-def l2_sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance with per-element double widening and ordered
-    left-to-right accumulation (bit-identical to DuckDB's list_sum fold).
-
-    SQL mirror: ``list_sum(list_transform(list_zip(a, b),
-    x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-       * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))``.
-    """
-    diffs = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def lloyd_assign(

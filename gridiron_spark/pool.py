@@ -27,11 +27,16 @@ class Pool:
     def __init__(self, spark: SparkSession, path: str | Path):
         self.spark = spark
         self.path = str(path)
-        # through Hadoop's FileSystem, so file://, s3a:// and hdfs:// lakes
-        # resolve the way Spark's own reads will
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(self.path)
-        if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        fs, jpath = self._hadoop_fs()
+        if not fs.exists(jpath):
             raise FileNotFoundError(f"pool not found: {self.path}")
+
+    def _hadoop_fs(self):
+        """The lake root's Hadoop ``FileSystem`` and ``Path``: file://,
+        s3a:// and hdfs:// lakes resolve the way Spark's own reads will."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        conf = self.spark._jsc.hadoopConfiguration()
+        return jpath.getFileSystem(conf), jpath
 
     def scan(self) -> DataFrame:
         """Lazy whole-lake scan with partition-column discovery
@@ -97,16 +102,18 @@ class Pool:
         # derive the top-level partition key from the lake layout itself
         # (any Hive-style `key=value` first level, not a hardcoded season=*),
         # so lakes partitioned differently still get per-branch schemas.
-        root = Path(self.path)
+        fs, jpath = self._hadoop_fs()
         hive_dirs = sorted(
-            p for p in root.glob("*=*") if p.is_dir() and p.name.count("=") == 1
+            st.getPath().getName()
+            for st in fs.listStatus(jpath)
+            if st.isDirectory() and st.getPath().getName().count("=") == 1
         )
-        keys = {p.name.split("=", 1)[0] for p in hive_dirs}
+        keys = {name.split("=", 1)[0] for name in hive_dirs}
         if len(keys) != 1:
-            # No single first-level partition key (non-local path, flat
-            # layout, or mixed keys): scan_unified's per-branch schema
-            # reconciliation can't apply. Warn instead of silently adopting
-            # one footprint — the exact failure mode the docstring fences.
+            # No single first-level partition key (flat layout or mixed
+            # keys): scan_unified's per-branch schema reconciliation can't
+            # apply. Warn instead of silently adopting one footprint — the
+            # exact failure mode the docstring fences.
             import warnings
 
             warnings.warn(
@@ -117,10 +124,10 @@ class Pool:
                 stacklevel=2,
             )
             return self.scan()
-        seasons = hive_dirs
+        root = self.path.rstrip("/")
         branches = [
-            self.spark.read.option("basePath", self.path).parquet(str(p))
-            for p in seasons
+            self.spark.read.option("basePath", self.path).parquet(f"{root}/{name}")
+            for name in hive_dirs
         ]
         unified: dict[str, str] = {}
         for df in branches:

@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from gridiron_spark.functions.vectors import matches
 from gridiron_spark.io.tables import load_table
 from gridiron_spark.queries import register
 from gridiron_spark.queries.dedup import _JACCARD_SQL, _SHINGLES_CTE
@@ -161,17 +162,7 @@ def _mine_candidate_pairs(spark, sf_dir):
         .select(
             "doc_a",
             "doc_b",
-            (
-                F.aggregate(
-                    F.zip_with(
-                        "sig_a", "sig_b",
-                        lambda x, y: (x == y).cast("int"),
-                    ),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                )
-                / F.lit(16.0)
-            ).alias("est_jaccard"),
+            (matches("sig_a", "sig_b") / F.lit(16.0)).alias("est_jaccard"),
         )
     )
     return est.join(exact, ["doc_a", "doc_b"]).select(

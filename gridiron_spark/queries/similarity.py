@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gridiron_spark.functions.vectors import cosine
+from gridiron_spark.functions.vectors import cosine, int_dot, int_l2_sq
 from gridiron_spark.io.tables import fan_out, load_table, observed_pin, pin
 from gridiron_spark.queries import register
 
@@ -264,9 +264,7 @@ def embedding_quantize(spark, sf_dir):
         "vec_id",
         scale.alias("scale"),
         F.md5(F.concat_ws(",", q.cast("array<string>"))).alias("q_md5"),
-        F.aggregate(
-            F.zip_with(q, q, lambda a, b: a * b), F.lit(0).cast("bigint"), lambda acc, x: acc + x
-        ).alias("q_norm_sq"),
+        int_dot(q, q).alias("q_norm_sq"),
     )
 
 
@@ -1207,19 +1205,12 @@ def ann_pq_topk(spark, sf_dir):
         F.col("qsub").alias("csub"),
     )
 
-    def l2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
-
     w = Window.partitionBy("vec_id", "m").orderBy("dist", "cid")
     codes = (
         subs.join(F.broadcast(cb), F.col("m") == F.col("cm"))
         .select(
             "vec_id", "m", "cid",
-            l2(F.col("qsub"), F.col("csub")).alias("dist"),
+            int_l2_sq("qsub", "csub").alias("dist"),
         )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -1230,7 +1221,7 @@ def ann_pq_topk(spark, sf_dir):
     )
     qtab = cb.join(F.broadcast(qsubs), F.col("cm") == F.col("qm")).select(
         F.col("cm").alias("tm"), F.col("cid").alias("tcid"),
-        l2(F.col("qqsub"), F.col("csub")).alias("d"),
+        int_l2_sq("qqsub", "csub").alias("d"),
     )
     return (
         codes.filter(F.col("vec_id") != _QUERY_VEC_ID)
@@ -1264,34 +1255,14 @@ def _panel_knn_edges(spark, sf_dir):
     triangle_count_knn (clustering structure) — one generator, two graph
     algorithms, so the two entries are guaranteed to describe the SAME
     graph."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % _PR_MOD == 0).select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 64).cast("bigint"),
-        ).alias("qv"),
-    )
+    q = _quantized(spark, sf_dir).filter(F.col("vec_id") % _PR_MOD == 0)
     a = q.select(F.col("vec_id").alias("src"), F.col("qv").alias("qa"))
     b = q.select(F.col("vec_id").alias("dst"), F.col("qv").alias("qb"))
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     pairs = (
         a.join(F.broadcast(b), F.col("src") != F.col("dst"))
-        .select("src", "dst", dot.alias("dot"))
+        .select("src", "dst", int_dot("qa", "qb").alias("dot"))
     )
-    w = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    edges = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _PR_K)
-        .select("src", "dst")
-    )
-    return q, edges
+    return q, _top_k(pairs, _PR_K).select("src", "dst")
 
 
 # the directed-3NN edge CTEs (q, p, e) shared by the pagerank and triangle
@@ -1992,6 +1963,52 @@ def _quantized(spark, sf_dir):
     )
 
 
+# The k-NN graph stage every builder shares: candidate pairs from a cell
+# key, exact integer dots on the quantized vectors, top-k per source by
+# (dot desc, dst asc) — the candidate → verify → top-k pipeline.
+
+
+def _cell_pairs(a, b, keys):
+    """Distinct (src, dst) pairs of a vector in ``a`` and a vector in
+    ``b`` that agree on every column of ``keys``, with src != dst."""
+    on = F.col(f"a.{keys[0]}") == F.col(f"b.{keys[0]}")
+    for key in keys[1:]:
+        on = on & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+    return (
+        a.alias("a")
+        .join(b.alias("b"), on & (F.col("a.vec_id") != F.col("b.vec_id")))
+        .select(
+            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
+        )
+        .distinct()
+    )
+
+
+def _score_pairs(cand, q):
+    """(src, dst, dot): each candidate pair with the exact integer dot of
+    its two quantized vectors (``q`` = (vec_id, qv))."""
+    return (
+        cand.join(q.select(F.col("vec_id").alias("src"),
+                           F.col("qv").alias("qa")), "src")
+        .join(q.select(F.col("vec_id").alias("dst"),
+                       F.col("qv").alias("qb")), "dst")
+        .select("src", "dst", int_dot("qa", "qb").alias("dot"))
+    )
+
+
+def _top_k(scored, k):
+    """The ``k`` best rows per src by (dot desc, dst asc); every column of
+    ``scored`` is kept."""
+    from pyspark.sql import Window
+
+    wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
+    return (
+        scored.withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= k)
+        .drop("rk")
+    )
+
+
 def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
                 super_fac=None, sprobes=_GIVF_SPROBES,
                 super2_fac=None, sprobes2=_GIVF_SPROBES):
@@ -2021,11 +2038,7 @@ def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
     cents = q.filter(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("qc")
     )
-    cdot = F.aggregate(
-        F.zip_with("qv", "qc", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    cdot = int_dot("qv", "qc")
     wp = Window.partitionBy("vec_id").orderBy(F.desc("cdot"), F.asc("cid"))
     if super_fac is None:
         fanout = qf.join(F.broadcast(cents))
@@ -2033,11 +2046,7 @@ def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
         sup = q.filter(F.col("vec_id") % (stride * super_fac) == 0).select(
             F.col("vec_id").alias("grp"), F.col("qv").alias("qg")
         )
-        gdot = F.aggregate(
-            F.zip_with("x", "qg", lambda a, b: a * b),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+        gdot = int_dot("x", "qg")
         # centroid → its top-dot branch (C×√C work, centroid-side only)
         cw = Window.partitionBy("cid").orderBy(F.desc("gdot"), F.asc("grp"))
         cmem = (
@@ -2063,11 +2072,7 @@ def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
             sup2 = q.filter(
                 F.col("vec_id") % (stride * super_fac * super2_fac) == 0
             ).select(F.col("vec_id").alias("g2"), F.col("qv").alias("qg2"))
-            g2dot = F.aggregate(
-                F.zip_with("qg", "qg2", lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            )
+            g2dot = int_dot("qg", "qg2")
             s2w = Window.partitionBy("grp").orderBy(
                 F.desc("g2dot"), F.asc("g2")
             )
@@ -2078,11 +2083,7 @@ def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
                 .filter(F.col("rn") == 1)
                 .select("grp", "qg", "g2")
             )
-            v2dot = F.aggregate(
-                F.zip_with("x", "qg2", lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            )
+            v2dot = int_dot("x", "qg2")
             vw2 = Window.partitionBy("vec_id").orderBy(
                 F.desc("v2dot"), F.asc("g2")
             )
@@ -2120,8 +2121,7 @@ def _ivf_assign(spark, sf_dir, stride=_GIVF_STRIDE, probes=_GIVF_PROBES,
 def knn_graph_ivf_edges(spark, sf_dir, stride=_GIVF_STRIDE,
                         probes=_GIVF_PROBES, k=_GIVF_K,
                         super_fac=None, sprobes=_GIVF_SPROBES,
-                        super2_fac=None, sprobes2=_GIVF_SPROBES,
-                        label_mismatch_only=False):
+                        super2_fac=None, sprobes2=_GIVF_SPROBES):
     """Approximate k-NN graph over the WHOLE embeddings table (not the
     centrality panel): quantize (floor(x·64) — the _panel_knn_edges
     integer-dot metric), assign every vector to its ``probes`` nearest
@@ -2139,63 +2139,10 @@ def knn_graph_ivf_edges(spark, sf_dir, stride=_GIVF_STRIDE,
     single-level assignment exactly (pytest-pinned), so the two paths
     share every downstream stage (quantization + cell assignment live in
     the shared ``_ivf_assign``)."""
-    from pyspark.sql import Window
-
     q, assigned = _ivf_assign(spark, sf_dir, stride=stride, probes=probes,
                               super_fac=super_fac, sprobes=sprobes,
                               super2_fac=super2_fac, sprobes2=sprobes2)
-    cand = (
-        assigned.alias("a")
-        .join(
-            assigned.alias("b"),
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .distinct()
-    )
-    pdot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(q.select(F.col("vec_id").alias("src"),
-                           F.col("qv").alias("qa")), "src")
-        .join(q.select(F.col("vec_id").alias("dst"),
-                       F.col("qv").alias("qb")), "dst")
-        .select("src", "dst", pdot.alias("dot"))
-    )
-    wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    if label_mismatch_only:
-        # hard-negative regime: labels ride the same id-equi-joins the
-        # quantized vectors do; only cross-label candidates reach the rank
-        lab = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("label").cast("bigint").alias("l")
-        )
-        scored = (
-            scored.join(lab.select(F.col("vec_id").alias("src"),
-                                   F.col("l").alias("anchor_label")), "src")
-            .join(lab.select(F.col("vec_id").alias("dst"),
-                             F.col("l").alias("negative_label")), "dst")
-            .filter(F.col("anchor_label") != F.col("negative_label"))
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(wk))
-            .filter(F.col("rk") <= k)
-            .select(
-                F.col("src").alias("anchor"),
-                F.col("dst").alias("negative"),
-                "dot", "anchor_label", "negative_label",
-            )
-        )
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("src", "dst", "dot")
-    )
+    return _top_k(_score_pairs(_cell_pairs(assigned, assigned, ["cid"]), q), k)
 
 
 # the IVF candidate chain (ends in CTE ``scored`` = exact-dot-scored
@@ -2582,13 +2529,7 @@ def pca_power_projection(spark, sf_dir):
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     d, scale = _PCA_D, _PCA_SCALE
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.floor(x.cast("double") * 64).cast("bigint")
-        ).alias("q"),
-    )
+    q = _quantized(spark, sf_dir)
 
     def gram_partial(batches):
         import numpy as np
@@ -2596,12 +2537,12 @@ def pca_power_projection(spark, sf_dir):
 
         G = np.zeros((d, d), dtype=np.int64)
         for pdf in batches:
-            m = np.array(pdf["q"].tolist(), dtype=np.int64)
+            m = np.array(pdf["qv"].tolist(), dtype=np.int64)
             if len(m):
                 G += m.T @ m
         yield pd.DataFrame({"g": [G.flatten().tolist()]})
 
-    parts = q.select("q").mapInPandas(
+    parts = q.select("qv").mapInPandas(
         gram_partial, StructType([StructField("g", ArrayType(LongType()))])
     ).collect()  # |batches| rows of d² cells — corpus-independent size
     gram = [0] * (d * d)
@@ -2624,14 +2565,7 @@ def pca_power_projection(spark, sf_dir):
         m = max(abs(x) for x in u)
         v = [-((-x) * scale // m) if x < 0 else (x * scale) // m for x in u]
     direction = F.array(*[F.lit(int(x)).cast("bigint") for x in v])
-    return q.select(
-        "vec_id",
-        F.aggregate(
-            F.zip_with("q", direction, lambda a, b: a * b),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ).alias("proj"),
-    )
+    return q.select("vec_id", int_dot("qv", direction).alias("proj"))
 
 
 pca_power_projection.__doc__ = pca_power_projection.__doc__.format(
@@ -3092,11 +3026,7 @@ def decontaminate_semantic_ivf(spark, sf_dir):
     )
     corp = assigned.filter(F.col("vec_id") % _DECON_MOD != 0)
     pairs = corp.join(bench, "cid").select("vec_id", "bench_id").distinct()
-    pdot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    pdot = int_dot("qa", "qb")
     scored = (
         pairs.join(q.select(F.col("vec_id"), F.col("qv").alias("qa")),
                    "vec_id")
@@ -3295,11 +3225,7 @@ def _cell_split_assign(spark, sf_dir, cap=_SPLIT_CAP, probes=1):
         q.select(F.col("vec_id").alias("seed"), F.col("qv").alias("qs")),
         "seed",
     )
-    sdot = F.aggregate(
-        F.zip_with("qv", "qs", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    sdot = int_dot("qv", "qs")
     wr = Window.partitionBy("vec_id", "cid").orderBy(
         F.desc("sdot"), F.asc("seed")
     )
@@ -3368,42 +3294,11 @@ def knn_graph_cellsplit(spark, sf_dir, cap=_SPLIT_CAP):
     bounded key. Probe: BASELINE.md round-11 (candidate term on the
     exact-copy corpus).
     """
-    from pyspark.sql import Window
-
     q, remap = _cell_split_assign(spark, sf_dir, cap=cap)
     # both sides of the candidate self-join read the remap — pin it once
     a = pin(remap, eager=False)
-    cand = (
-        a.alias("a")
-        .join(
-            a.alias("b"),
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.sub_cid") == F.col("b.sub_cid"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .distinct()
-    )
-    pdot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(q.select(F.col("vec_id").alias("src"),
-                           F.col("qv").alias("qa")), "src")
-        .join(q.select(F.col("vec_id").alias("dst"),
-                       F.col("qv").alias("qb")), "dst")
-        .select("src", "dst", pdot.alias("dot"))
-    )
-    wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= _GIVF_K)
-        .select("src", "dst", "dot")
-    )
+    cand = _cell_pairs(a, a, ["cid", "sub_cid"])
+    return _top_k(_score_pairs(cand, q), _GIVF_K)
 
 
 knn_graph_cellsplit.__doc__ = knn_graph_cellsplit.__doc__.format(k=_GIVF_K)
@@ -3485,43 +3380,11 @@ def knn_graph_cellsplit_probe(spark, sf_dir, cap=_SPLIT_CAP,
     side of the candidate equi-join carries ≤ {p} rows per hot-cell
     member (the probe fan-out is map-side, pruned by the same Partial
     WindowGroupLimit rank); the top-{k} per source is unchanged."""
-    from pyspark.sql import Window
-
     q, remap = _cell_split_assign(spark, sf_dir, cap=cap, probes=probes)
     # both sides of the candidate join read the remap — pin it once
     a = pin(remap, eager=False)
-    home = a.filter(F.col("home"))
-    cand = (
-        a.alias("a")
-        .join(
-            home.alias("b"),
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.sub_cid") == F.col("b.sub_cid"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .distinct()
-    )
-    pdot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(q.select(F.col("vec_id").alias("src"),
-                           F.col("qv").alias("qa")), "src")
-        .join(q.select(F.col("vec_id").alias("dst"),
-                       F.col("qv").alias("qb")), "dst")
-        .select("src", "dst", pdot.alias("dot"))
-    )
-    wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= _GIVF_K)
-        .select("src", "dst", "dot")
-    )
+    cand = _cell_pairs(a, a.filter(F.col("home")), ["cid", "sub_cid"])
+    return _top_k(_score_pairs(cand, q), _GIVF_K)
 
 
 knn_graph_cellsplit_probe.__doc__ = knn_graph_cellsplit_probe.__doc__.format(
@@ -3722,11 +3585,7 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
                 F.col("vec_id").alias("seed"), F.col("qv").alias("qs"),
             )
         )
-        sdot = F.aggregate(
-            F.zip_with("qv", "qs", lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+        sdot = int_dot("qv", "qs")
         # round 1: (dot DESC, seed ASC); later rounds: md5 tie-spread
         tiebreak = (
             F.asc("seed") if rnd == 0
@@ -3762,45 +3621,12 @@ def knn_graph_recursive_edges(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=2,
     census, not the after-one-round census. With no hot cells the map is
     the identity (ck = cid as a string) and the edges are byte-equal to
     knn_graph_ivf's (pytest-pinned)."""
-    from pyspark.sql import Window
-
     rmap = recursive_cell_split(spark, sf_dir, cap=cap,
                                 max_rounds=max_rounds)
     # both sides of the candidate self-join read the map — pin it once
     a = pin(rmap, eager=False)
-    # the shared quantized table for exact-dot scoring
-    q = _quantized(spark, sf_dir)
-    cand = (
-        a.alias("a")
-        .join(
-            a.alias("b"),
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.ck") == F.col("b.ck"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .distinct()
-    )
-    pdot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(q.select(F.col("vec_id").alias("src"),
-                           F.col("qv").alias("qa")), "src")
-        .join(q.select(F.col("vec_id").alias("dst"),
-                       F.col("qv").alias("qb")), "dst")
-        .select("src", "dst", pdot.alias("dot"))
-    )
-    wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("src", "dst", "dot")
-    )
+    cand = _cell_pairs(a, a, ["cid", "ck"])
+    return _top_k(_score_pairs(cand, _quantized(spark, sf_dir)), k)
 
 
 @register(
@@ -3910,9 +3736,23 @@ def hard_negative_mining(spark, sf_dir):
     coverage) — on the 10-cluster fixture every anchor's 2 probed cells
     mix labels, so coverage is full there.
     """
-    return knn_graph_ivf_edges(
-        spark, sf_dir, k=_HNEG_K, super_fac=_GIVF_SFAC,
-        label_mismatch_only=True,
+    q, assigned = _ivf_assign(spark, sf_dir, super_fac=_GIVF_SFAC)
+    scored = _score_pairs(_cell_pairs(assigned, assigned, ["cid"]), q)
+    # labels ride the same id-equi-joins the quantized vectors do; only
+    # cross-label candidates reach the rank
+    lab = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("label").cast("bigint").alias("l")
+    )
+    neg = (
+        scored.join(lab.select(F.col("vec_id").alias("src"),
+                               F.col("l").alias("anchor_label")), "src")
+        .join(lab.select(F.col("vec_id").alias("dst"),
+                         F.col("l").alias("negative_label")), "dst")
+        .filter(F.col("anchor_label") != F.col("negative_label"))
+    )
+    return _top_k(neg, _HNEG_K).select(
+        F.col("src").alias("anchor"), F.col("dst").alias("negative"),
+        "dot", "anchor_label", "negative_label",
     )
 
 

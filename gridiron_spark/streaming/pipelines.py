@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from gridiron_spark.functions.decimal_safe import dsum
+from gridiron_spark.functions.vectors import matches
 from gridiron_spark.io.tables import pin
 
 # canonical micro-batch event schema (events-shaped; ts as a proper timestamp
@@ -988,16 +989,9 @@ def minhash_sidecar_dedup_available_now(
             .select(
                 "pid",
                 "did",
-                (
-                    F.aggregate(
-                        F.zip_with(
-                            "p_sig", "b_sig", lambda x, y: (x == y).cast("int")
-                        ),
-                        F.lit(0),
-                        lambda acc, x: acc + x,
-                    )
-                    / F.lit(float(num_hashes))
-                ).alias("est_jaccard"),
+                (matches("p_sig", "b_sig") / F.lit(float(num_hashes))).alias(
+                    "est_jaccard"
+                ),
             )
         )
         hits = (

@@ -19,6 +19,7 @@ from gridiron_spark.operators.features import (
     play_summary,
     reindex_frames,
     side_predicates,
+    side_split,
 )
 from gridiron_spark.operators.tensorize import tensorize_plays
 from gridiron_spark.pool import Pool
@@ -55,6 +56,29 @@ def test_ball_rule_and_side_split(pool):
     preds = side_predicates()
     counts = {k: df.filter(p).count() for k, p in preds.items()}
     assert counts == {"ball": 50, "offense": 11 * 50, "defense": 11 * 50}
+
+
+def test_side_predicates_match_side_split_on_player_side(spark):
+    """On a ``playerSide`` frame (the bdb-2025/2026 layout, no ``team``
+    column) each predicate selects exactly the rows side_split labels with
+    its side, literal offense/defense values included."""
+    df = spark.createDataFrame(
+        [(1, "Offense"), (2, "Offense"), (3, "Defense"), (4, "home"),
+         (5, "away"), (6, "sideline"), (None, "football"), (0, None)],
+        "nflId int, playerSide string",
+    )
+    for home_is_offense, want in (
+        (True, {"ball": 2, "offense": 3, "defense": 2, "other": 1}),
+        (False, {"ball": 2, "offense": 3, "defense": 2, "other": 1}),
+    ):
+        labeled = side_split(df, home_is_offense)
+        split = {r.side: r["count"] for r in labeled.groupBy("side").count().collect()}
+        assert split == want
+        preds = side_predicates(home_is_offense, df=df)
+        assert {k: df.filter(p).count() for k, p in preds.items()} == {
+            k: split[k] for k in preds
+        }
+    assert df.filter(is_ball(df)).count() == split["ball"]
 
 
 def test_reindex_and_events_and_summary(pool):

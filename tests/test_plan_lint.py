@@ -139,28 +139,6 @@ _BNLJ_OK = {
                                  # class sizes are BHJ equi-joins
 }
 
-# constructing these executes real work (streaming drains, staged-artifact
-# mining, checkpointed loops) — still linted, just slower to build
-_EAGER = {
-    name
-    for name in _CATALOG
-    if name.startswith("streaming_")
-    or name in {
-        "staged_candidate_pairs", "pagerank_knn_centrality",
-        "curriculum_schedule", "ranged_global_sort", "dedup_clusters",
-        "dedup_clusters_star", "corpus_clean_pipeline",
-        "sequence_pack_bucketed", "mixture_token_budget",
-        "training_data_pipeline", "bpe_merge_sequence", "bpe_encode_tokens",
-        # eager-checkpointed graph chains (edges materialize at build)
-        "pagerank_ivf_centrality", "harmonic_centrality_ivf",
-        "kcore_decompose_ivf", "triangle_count_ivf",
-        "harmonic_centrality_knn",
-        "kcore_decompose_knn", "community_lpa_ivf",
-        "label_propagation_knn", "tokenizer_fertility_gate",
-    }
-}
-
-
 @pytest.fixture(scope="module")
 def plans(spark):
     out: dict[str, str] = {}

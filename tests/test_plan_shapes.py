@@ -195,6 +195,35 @@ def test_no_timezone_dependent_expressions():
     assert not hits, "timezone-dependent expressions:\n" + "\n".join(hits)
 
 
+# the only zip_with calls outside functions/vectors.py: neither folds a
+# product, a distance or an agreement count
+_ZIP_WITH_ALLOWED = {
+    "gridiron_spark/queries/dedup.py",  # content-defined chunk substrings
+    "gridiron_spark/queries/tpch_extra.py",  # higher_order_functions demo
+}
+
+
+def test_array_kernels_live_in_vectors():
+    """Every array kernel (dot, distance, agreement count) is written once,
+    in functions/vectors.py; a query calls it instead of rolling its own
+    ``F.zip_with`` fold. Source-level guard: comments are stripped before
+    matching."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "gridiron_spark"
+    hits = []
+    for path in pkg.rglob("*.py"):
+        rel = path.relative_to(pkg.parent).as_posix()
+        if rel == "gridiron_spark/functions/vectors.py":
+            continue
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if "F.zip_with(" in line.split("#", 1)[0]:
+                hits.append((rel, lineno))
+    outside = [f"{r}:{n}" for r, n in hits if r not in _ZIP_WITH_ALLOWED]
+    assert not outside, "zip_with outside functions/vectors.py:\n" + "\n".join(outside)
+    assert sorted(r for r, _ in hits) == sorted(_ZIP_WITH_ALLOWED)
+
+
 def test_staged_pair_consumers_reuse_artifact(spark):
     """The curation reports must answer from the staged candidate-pair
     parquet, not re-mine candidates: minhash_estimate_error is a pure

@@ -182,3 +182,30 @@ def test_scan_unified_warns_on_non_hive_layout(spark, tmp_path):
     assert any("scan_unified" in str(w.message) for w in caught), [
         str(w.message) for w in caught
     ]
+
+
+def test_scan_unified_on_uri_lake(spark, tmp_path):
+    """A two-season lake written under different schemas, opened as a
+    ``file://`` URI, unifies exactly like its plain path: the first-level
+    ``season=`` dirs are listed through Hadoop's FileSystem, so the URI
+    neither warns nor falls back to one adopted schema."""
+    import warnings
+
+    lake = tmp_path / "lake"
+    spark.createDataFrame([(1, 1, "a")], "gameId int, frameId smallint, route string") \
+        .write.parquet(str(lake / "season=2018"))
+    spark.createDataFrame([(2, 70000, 81.5)], "gameId int, frameId int, playerWeight double") \
+        .write.parquet(str(lake / "season=2023"))
+
+    def unified(path):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            df = Pool(spark, path).scan_unified()
+        assert not [w for w in caught if "scan_unified" in str(w.message)]
+        return sorted(df.dtypes), sorted(map(tuple, df.collect()), key=str)
+
+    plain = unified(str(lake))
+    assert dict(plain[0])["frameId"] == "int"
+    assert {"route", "playerWeight", "season"} <= dict(plain[0]).keys()
+    assert len(plain[1]) == 2
+    assert unified(f"file://{lake}") == plain

@@ -565,110 +565,6 @@ def test_domain_holdout_split_no_straddle(spark):
     assert set(audit) == set(docs_per)
 
 
-def test_knn_graph_ivf_full_probe_equals_brute(spark):
-    """Probing ALL cells makes the candidate set all pairs, so the IVF
-    graph must equal the brute-force exact top-k graph edge for edge —
-    pinning assignment, candidate dedup, and verify as exact machinery.
-    With probes=2 the edges must be a subset-quality approximation:
-    same schema, <= k edges per source, dots never exceed the brute
-    top-1."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gridiron_spark.io.tables import load_table
-    from gridiron_spark.queries.similarity import knn_graph_ivf_edges
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 64).cast("bigint"),
-        ).alias("qv"),
-    )
-    a = q.select(F.col("vec_id").alias("src"), F.col("qv").alias("qa"))
-    b = q.select(F.col("vec_id").alias("dst"), F.col("qv").alias("qb"))
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
-    brute = {
-        (r["src"], r["dst"]): r["dot"]
-        for r in a.join(b, F.col("src") != F.col("dst"))
-        .select("src", "dst", dot.alias("dot"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .collect()
-    }
-    n_cells = q.filter(F.col("vec_id") % 10 == 0).count()
-    full = {
-        (r["src"], r["dst"]): r["dot"]
-        for r in knn_graph_ivf_edges(
-            spark, SF_SMALL, stride=10, probes=n_cells, k=3
-        ).collect()
-    }
-    assert full == brute
-    approx = list(
-        knn_graph_ivf_edges(spark, SF_SMALL, stride=10, probes=2, k=3)
-        .collect()
-    )
-    import collections
-
-    per_src = collections.Counter(r["src"] for r in approx)
-    assert all(v <= 3 for v in per_src.values())
-    best_brute = {}
-    for (s, d), v in brute.items():
-        best_brute[s] = max(best_brute.get(s, v), v)
-    for r in approx:
-        assert r["dot"] <= best_brute[r["src"]]
-
-
-def test_knn_graph_ivf_two_level_all_branches_equals_single(spark):
-    """Two-level degeneracy pin: probing ALL branches makes the probed
-    centroid union the full coarse table, so two-level assignment must
-    reproduce the single-level edge set exactly — every downstream stage
-    (candidate join, dedup, verify, rank) is shared machinery."""
-    from pyspark.sql import functions as F
-
-    from gridiron_spark.io.tables import load_table
-    from gridiron_spark.queries.similarity import knn_graph_ivf_edges
-    from tests.conftest import SF_SMALL
-
-    n_sup = (
-        load_table(spark, SF_SMALL, "embeddings")
-        .filter(F.col("vec_id") % (10 * 5) == 0)
-        .count()
-    )
-    assert n_sup >= 2, "fixture too small to exercise >1 branch"
-    single = {
-        (r["src"], r["dst"]): r["dot"]
-        for r in knn_graph_ivf_edges(
-            spark, SF_SMALL, stride=10, probes=2, k=3
-        ).collect()
-    }
-    two_all = {
-        (r["src"], r["dst"]): r["dot"]
-        for r in knn_graph_ivf_edges(
-            spark, SF_SMALL, stride=10, probes=2, k=3,
-            super_fac=5, sprobes=n_sup,
-        ).collect()
-    }
-    assert two_all == single
-    # the shipped config (2 branches) stays an approximation of it:
-    # same schema, <=k edges per source, never a better dot than brute
-    two = knn_graph_ivf_edges(
-        spark, SF_SMALL, stride=10, probes=2, k=3, super_fac=5, sprobes=2
-    )
-    assert two.columns == ["src", "dst", "dot"]
-    per_src = (
-        two.groupBy("src").count().agg(F.max("count")).collect()[0][0]
-    )
-    assert per_src <= 3
-
-
 def test_kmeans_fit_two_level_full_probe_equals_brute(spark):
     """kmeans_fit(two_level_groups=g, probes=g) must train the IDENTICAL
     centroids as the brute path: with every branch probed the per-round
@@ -693,32 +589,6 @@ def test_kmeans_fit_two_level_full_probe_equals_brute(spark):
         ).collect()
     }
     assert two == brute
-
-
-def test_cell_split_no_hot_cells_degenerates_to_knn_graph_ivf(spark):
-    """knn_graph_cellsplit's contract: with no cell over the cap, the
-    remap is a pure passthrough (every sub_cid = -1) and the graph is
-    byte-identical to knn_graph_ivf — the split only changes behavior
-    where a cell actually violates the population bound. Drives the
-    REGISTERED query function (cap is a keyword with the catalog
-    default), so a divergence in its own body goes red here."""
-    from pyspark.sql import functions as F
-
-    from gridiron_spark.queries.similarity import (
-        _GIVF_SFAC,
-        _cell_split_assign,
-        knn_graph_cellsplit,
-        knn_graph_ivf_edges,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    _, remap = _cell_split_assign(spark, sf_dir, cap=10**9)
-    assert remap.filter(F.col("sub_cid") != -1).count() == 0
-    got = knn_graph_cellsplit(spark, sf_dir, cap=10**9)
-    want = knn_graph_ivf_edges(spark, sf_dir, super_fac=_GIVF_SFAC)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
 
 def test_cell_split_bounds_hot_cell_candidates(spark):
@@ -849,24 +719,6 @@ def test_recursive_cell_split_caps_exact_copy_mega_cell(spark, tmp_path):
     # membership conserved: every (vec_id, cid) appears exactly once
     n_pairs = remap.count()
     assert remap.select("vec_id", "cid").distinct().count() == n_pairs
-
-
-def test_recursive_graph_no_hot_cells_degenerates_to_knn_graph_ivf(spark):
-    """knn_graph_recursive_split's contract (the same pin its one-round
-    sibling carries): with no cell over the cap the recursive map is the
-    identity, so the graph must be byte-equal to knn_graph_ivf."""
-    from gridiron_spark.queries.similarity import (
-        _GIVF_SFAC,
-        knn_graph_ivf_edges,
-        knn_graph_recursive_edges,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = knn_graph_recursive_edges(spark, sf_dir, cap=10**9, max_rounds=2)
-    want = knn_graph_ivf_edges(spark, sf_dir, super_fac=_GIVF_SFAC)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
 
 def test_recursive_graph_caps_mega_cell_candidates(spark, tmp_path):
